@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .resolution import (
+    MIN_SHARED,
+    RARE_DF,
     _doc_rep_star,
     blocking_keys,
     candidate_pairs,
@@ -58,9 +60,9 @@ from .resolution import (
 
 
 def delta_candidate_pairs(new_keys: DataFrame, base_keys: DataFrame,
-                          min_shared: int = 2,
+                          min_shared: int = MIN_SHARED,
                           key_df: DataFrame | None = None,
-                          rare_df: int = 16) -> DataFrame:
+                          rare_df: int = RARE_DF) -> DataFrame:
     """Candidate pairs with ≥1 new endpoint: new×new (self-join) ∪
     new×base (equi-join), meta-blocked on the COMBINED shared-key
     count.  Orientation: doc_a < doc_b, so a pair appears once no
@@ -164,8 +166,8 @@ def incremental_resolve(spark: SparkSession,
                         threshold: float = 0.65,
                         ngram: int = 4,
                         max_block: int = 200,
-                        min_shared: int = 2,
-                        rare_df: int = 16,
+                        min_shared: int = MIN_SHARED,
+                        rare_df: int = RARE_DF,
                         base_reps: DataFrame | None = None,
                         base_keys: DataFrame | None = None,
                         idf: dict[str, float] | None = None,

@@ -42,27 +42,43 @@ _STOPWORDS = {
 
 # ------------------------------------------------------------------ 1
 def doc_profiles(documents: DataFrame) -> DataFrame:
-    """(doc_id, profile, tokens) — normalized value text per doc.
+    """(doc_id, tokens, profile, id_kv) — normalized value text per doc.
 
     Pure native ops: explode spans, keep text payload values, lowercase,
     split; one groupBy(doc_id) shuffle that every downstream step reuses.
+
+    ``id_kv`` is the sorted set of ``normkey=digits`` entries of the
+    doc's digit-bearing values (``normkey``: the span key with
+    non-alphanumerics stripped, so ``cell line`` and ``cell_line``
+    agree; ``digits``: the value's digit sequence, so a typo such as
+    ``2Y ear old`` keeps ``age=2``) — the identifier veto's input (see
+    :data:`_KV_CONFLICT`).  It rides the same aggregation as ``tokens``:
+    every token row carries its span's entry and ``collect_set`` dedups.
     """
     sp = (documents
           .select("doc_id", F.explode("spans").alias("span"))
           .where(F.col("span.kind") == "text")
           .select("doc_id",
                   F.lower(F.col("span.text")).alias("payload")))
-    val = F.when(F.instr("payload", ": ") > 0,
+    sep = F.instr("payload", ": ")
+    val = F.when(sep > 0,
                  F.expr("substring(payload, instr(payload, ': ') + 2)")
                  ).otherwise(F.col("payload"))
-    toks = (sp.select("doc_id", val.alias("value"))
-            .select("doc_id",
+    key = F.regexp_replace(
+        F.expr("substring(payload, 1, instr(payload, ': ') - 1)"),
+        "[^0-9a-z]", "")
+    digits = F.regexp_replace(val, "[^0-9]", "")
+    kv = F.when((sep > 0) & (F.length(digits) > 0),
+                F.concat(key, F.lit("="), digits))
+    toks = (sp.select("doc_id", val.alias("value"), kv.alias("kv"))
+            .select("doc_id", "kv",
                     F.explode(F.split("value", r"[^0-9a-z+']+")).alias("tok"))
             .where(F.length("tok") > 0))
     return (toks.groupBy("doc_id")
-            .agg(F.array_sort(F.collect_set("tok")).alias("tokens"))
+            .agg(F.array_sort(F.collect_set("tok")).alias("tokens"),
+                 F.array_sort(F.collect_set("kv")).alias("id_kv"))
             .select("doc_id", "tokens",
-                    F.array_join("tokens", " ").alias("profile")))
+                    F.array_join("tokens", " ").alias("profile"), "id_kv"))
 
 
 # ------------------------------------------------------------------ 2
@@ -114,11 +130,13 @@ def representative_profiles(profiles: DataFrame) -> DataFrame:
     corpora (the normal case for a dedup workload) this shrinks the
     pair volume quadratically for free.  ``tokens`` is determined by
     ``profile`` (profile = array_join(tokens)), so any group member's
-    tokens are the group's tokens."""
+    tokens are the group's tokens; ``id_kv`` (keys are not in the
+    profile) is the rep doc's own."""
     return (profiles.groupBy("profile")
             .agg(F.min("doc_id").alias("doc_id"),
-                 F.first("tokens").alias("tokens"))
-            .select("doc_id", "tokens", "profile"))
+                 F.first("tokens").alias("tokens"),
+                 F.min_by("id_kv", "doc_id").alias("id_kv"))
+            .select("doc_id", "tokens", "profile", "id_kv"))
 
 
 # ------------------------------------------------------------------ 3
@@ -135,8 +153,14 @@ _PAIR_SCHEMA = T.StructType([
 ])
 
 
-def candidate_pairs(keys: DataFrame, min_shared: int = 2,
-                    rare_df: int = 16) -> DataFrame:
+#: meta-blocking defaults shared by every caller of candidate_pairs —
+#: resolve_entities_checkpointed records them as er_scored's identity
+MIN_SHARED = 2
+RARE_DF = 16
+
+
+def candidate_pairs(keys: DataFrame, min_shared: int = MIN_SHARED,
+                    rare_df: int = RARE_DF) -> DataFrame:
     """Self-join on blocking key; doc_a < doc_b dedups orientation.
     AQE skew-join handles residual hot keys.
 
@@ -270,6 +294,19 @@ def _wsum_expr(mapcol: str, arr: str, default_idf: float) -> str:
             f"cast({default_idf} as double)))")
 
 
+#: SQL over two ``id_kv`` arrays (doc_profiles): the key-aware
+#: identifier veto — some normalized key carries a digit entry on one
+#: side that the other side, which has the same key, lacks.  A typo
+#: (``2y`` vs ``2``) or attributes dropped differently on each side
+#: (``h7`` under cell line vs ``1`` under passage) is not a conflict.
+#: Scalar spec: functions/similarity.py:kv_conflict.
+_KV_CONFLICT = (
+    "exists(array_except({a}, {b}), e -> exists({b}, f -> "
+    "substring_index(f, '=', 1) = substring_index(e, '=', 1))) OR "
+    "exists(array_except({b}, {a}), e -> exists({a}, f -> "
+    "substring_index(f, '=', 1) = substring_index(e, '=', 1)))")
+
+
 def score_pairs(pairs: DataFrame, profiles: DataFrame,
                 idf: dict[str, float] | None = None,
                 default_idf: float = 10.0,
@@ -296,6 +333,11 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
     < reject_below, so thresholding at ``>= reject_below`` is exact;
     consumers re-thresholding LOWER must filter on ``rejected``.
 
+    The identifier veto caps a pair at ``ID_CONFLICT_CAP``.  With
+    ``idf`` it is key-aware (:data:`_KV_CONFLICT` over the profiles'
+    ``id_kv``, evaluated natively); the ``idf=None`` native scorer keeps
+    the value-only ``batch_id_conflict`` its DuckDB oracles replicate.
+
     A per-row short-circuit keeps the HOF bound off byte-identical
     profiles (lazy IF — the bound expression never evaluates; they
     score 1.0 directly).  ``bound_skip_jaccard``, when set, ALSO skips
@@ -310,8 +352,8 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
 
     spark = pairs.sparkSession
     aug = reject_below is not None
+    key_veto = idf is not None
     prof = profiles
-    prof_materialized = False
     a_extra, b_extra = [], []
     if aug:
         idf_df = None
@@ -324,9 +366,7 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
         # without a materialization the explode+join+groupBy subtree
         # runs twice (measured 90.7 s vs 33.4 s for the native scoring
         # plan at 300k docs); one row per doc, bounded memory
-        if _os.environ.get("ER_PROF_CHECKPOINT", "1") == "1":
-            prof = prof.localCheckpoint(eager=True)
-            prof_materialized = True
+        prof = prof.localCheckpoint(eager=True)
         a_extra = [F.col("tok_w").alias("mw_a"), F.col("wsum").alias("wsum_a"),
                    F.col("first_chars").alias("fc_a"),
                    F.col("digit_toks").alias("dg_a"),
@@ -335,6 +375,9 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
                    F.col("first_chars").alias("fc_b"),
                    F.col("digit_toks").alias("dg_b"),
                    F.col("alpha_toks").alias("al_b")]
+    if key_veto:
+        a_extra.append(F.col("id_kv").alias("kv_a"))
+        b_extra.append(F.col("id_kv").alias("kv_b"))
     # Join strategy (guide §3.1): Catalyst sizes a localCheckpoint child
     # at defaultSizeInBytes, so the two profile-enrichment joins plan as
     # shuffle joins even when the profile side is a few thousand rows —
@@ -350,7 +393,7 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
     sc = pairs.sparkSession.sparkContext
     bcast_max = int(_os.environ.get("ER_BROADCAST_PROFILES_MAX", "200000"))
     use_bcast = False
-    if bcast_max > 0 and prof_materialized:
+    if bcast_max > 0 and aug:
         use_bcast = prof.count() <= bcast_max
     prof_a = prof.select(F.col("doc_id").alias("doc_a"),
                          F.col("profile").alias("prof_a"),
@@ -423,6 +466,9 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
                         f"IF({skip}, cast(2.0 as double), {bound})")))
     else:
         enriched = enriched.withColumn("lr", F.expr(lr_expr))
+    if key_veto:
+        enriched = enriched.withColumn(
+            "id_conf", F.expr(_KV_CONFLICT.format(a="kv_a", b="kv_b")))
 
     from ..functions.similarity import ID_CONFLICT_CAP
 
@@ -470,13 +516,12 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
                 todo = np.nonzero(~eq)[0]
             if todo.size:
                 lr_t = pdf["lr"].to_numpy(dtype=float)[todo]
-                conflict = None
                 if idf_local is None:
                     # exact token-set Jaccard ≡ the native j0 column —
                     # already computed JVM-side, zero Python work
                     jac = pdf["j0"].to_numpy(dtype=float)[todo]
                 else:
-                    jac, conflict = batch_soft_weighted_jaccard(
+                    jac = batch_soft_weighted_jaccard(
                         pdf["toks_a"].to_numpy()[todo],
                         pdf["toks_b"].to_numpy()[todo],
                         idf_local, default_idf)
@@ -489,12 +534,12 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
                     rows = todo[need]
                     jw = batch_jaro_winkler(pa_v[rows], pb_v[rows])
                     full = partial[need] + 0.2 * jw
-                    if conflict is None:
+                    if idf_local is None:
                         conf = batch_id_conflict(
                             pdf["toks_a"].to_numpy()[rows],
                             pdf["toks_b"].to_numpy()[rows])
                     else:
-                        conf = conflict[need]
+                        conf = pdf["id_conf"].to_numpy(dtype=bool)[rows]
                     sc_t[need] = np.where(
                         (full > ID_CONFLICT_CAP) & conf,
                         ID_CONFLICT_CAP, full)
@@ -508,6 +553,8 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
             "j0"]
     if aug:
         cols.append("upper")
+    if key_veto:
+        cols.append("id_conf")
     return (enriched.select(*cols)
             .mapInPandas(score_batches, schema=_PAIR_SCHEMA))
 
@@ -637,7 +684,7 @@ def cluster_terms(clusters: DataFrame, mapped_terms: DataFrame) -> DataFrame:
 def resolve_entities_native(spark: SparkSession, documents: DataFrame,
                             threshold: float = 0.65,
                             max_block: int = 200,
-                            rare_df: int = 16,
+                            rare_df: int = RARE_DF,
                             checkpoint: bool = True) -> dict[str, DataFrame]:
     """ER with the NATIVE-ONLY scorer — a deterministic, SQL-expressible
     configuration used as the DuckDB-oracled correctness anchor for the
@@ -672,7 +719,7 @@ def resolve_entities_native(spark: SparkSession, documents: DataFrame,
 
 def resolve_entities(spark: SparkSession, documents: DataFrame,
                      threshold: float = 0.65, ngram: int = 4,
-                     max_block: int = 200, rare_df: int = 16,
+                     max_block: int = 200, rare_df: int = RARE_DF,
                      checkpoint: bool = True) -> dict[str, DataFrame]:
     """Full ER pass → {profiles, pairs, clusters, metrics}."""
     profiles = doc_profiles(documents)
@@ -786,9 +833,13 @@ def resolve_entities_checkpointed(spark: SparkSession, documents: DataFrame,
     # pipeline silently mixes candidate-formation semantics (ADVICE
     # r05).  The params are recorded in the snapshot summary and the
     # resume is invalidated on mismatch.
-    blocking_params = {"blocking-min-shared": "2", "blocking-rare-df": "16",
-                      "blocking-max-block": str(max_block),
-                      "blocking-ngram": str(ngram)}
+    blocking_params = {"blocking-min-shared": str(MIN_SHARED),
+                       "blocking-rare-df": str(RARE_DF),
+                       "blocking-max-block": str(max_block),
+                       "blocking-ngram": str(ngram)}
+    # lazy either way: only the compute branch below runs ``keys``;
+    # ``hot`` is returned for the caller's metrics table
+    keys, hot = blocking_keys(reps, ngram=ngram, max_block=max_block)
     scored_path = _os.path.join(workdir, "er_scored")
     resumed_scored = None
     if IceLiteTable.exists(scored_path):
@@ -806,8 +857,8 @@ def resolve_entities_checkpointed(spark: SparkSession, documents: DataFrame,
         snap.stages_resumed.append("er_scored")
     else:
         idf, default_idf = token_idf(profiles)
-        keys, _hot = blocking_keys(reps, ngram=ngram, max_block=max_block)
-        pairs = candidate_pairs(keys)
+        pairs = candidate_pairs(keys, min_shared=MIN_SHARED,
+                                rare_df=RARE_DF)
         t_scored = (IceLiteTable.load(scored_path)
                     if IceLiteTable.exists(scored_path)
                     else IceLiteTable.create(scored_path))
@@ -851,7 +902,7 @@ def resolve_entities_checkpointed(spark: SparkSession, documents: DataFrame,
                    .crossJoin(star.select(F.count("*").alias("star_edges"))))
         t.commit(metrics, stage="er_match_metrics")
     result = {"profiles": profiles, "pairs": scored.unionByName(star),
-              "clusters": clusters,
+              "clusters": clusters, "hot_keys": hot,
               "match_metrics": t.read(spark)}
     return result, snap
 

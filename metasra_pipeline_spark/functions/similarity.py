@@ -170,6 +170,20 @@ def id_conflict(a, b) -> bool:
             and any(any(c.isdigit() for c in t) for t in sb - sa))
 
 
+def kv_conflict(kv_a, kv_b) -> bool:
+    """Key-aware identifier conflict over ``normkey=digits`` entries
+    (``id_kv`` of er.resolution.doc_profiles): some key present on both
+    sides carries an entry the other side lacks.  Unlike
+    :func:`id_conflict`, a typo'd value or attributes dropped
+    differently on each side do not count."""
+    sa, sb = set(kv_a), set(kv_b)
+
+    def keys(s):
+        return {e.split("=", 1)[0] for e in s}
+
+    return bool(keys(sa - sb) & keys(sb) or keys(sb - sa) & keys(sa))
+
+
 #: ceiling applied on identifier conflict — the deterministic-linkage
 #: veto: two records with different copied identifiers are never a
 #: confident match however similar the rest reads
@@ -179,10 +193,15 @@ ID_CONFLICT_CAP = 0.60
 def pair_score(profile_a: str, profile_b: str,
                toks_a: list[str], toks_b: list[str],
                idf: dict[str, float] | None = None,
-               default_idf: float = 10.0) -> float:
+               default_idf: float = 10.0,
+               kv_a: list[str] = (), kv_b: list[str] = ()) -> float:
     """Fused match score ∈ [0,1]: IDF-weighted soft token similarity (the
     discriminative signal) + Jaro-Winkler + Levenshtein ratio over the
-    normalized document profiles (fuzz tolerance for typos)."""
+    normalized document profiles (fuzz tolerance for typos).
+
+    The identifier veto is value-only (:func:`id_conflict`) without
+    ``idf`` and key-aware (:func:`kv_conflict` over ``kv_a``/``kv_b``)
+    with it — the two scorers of er.resolution.score_pairs."""
     jw = jaro_winkler(profile_a, profile_b)
     if idf is None:
         jac = token_set_jaccard(toks_a, toks_b)
@@ -190,6 +209,8 @@ def pair_score(profile_a: str, profile_b: str,
         jac = soft_weighted_jaccard(toks_a, toks_b, idf, default_idf)
     lr = lev_ratio(profile_a, profile_b)
     score = 0.65 * jac + 0.2 * jw + 0.15 * lr
-    if score > ID_CONFLICT_CAP and id_conflict(toks_a, toks_b):
+    conflict = (id_conflict(toks_a, toks_b) if idf is None
+                else kv_conflict(kv_a, kv_b))
+    if score > ID_CONFLICT_CAP and conflict:
         score = ID_CONFLICT_CAP
     return score

@@ -234,13 +234,12 @@ def _soft_credit(side: pd.DataFrame, exact: np.ndarray,
 def batch_soft_weighted_jaccard(toks_a: np.ndarray, toks_b: np.ndarray,
                                 idf: dict[str, float] | None,
                                 default_idf: float,
-                                jw_floor: float = 0.88
-                                ) -> tuple[np.ndarray, np.ndarray]:
-    """(soft-weighted-jaccard, id_conflict) for n token-list pairs.
+                                jw_floor: float = 0.88) -> np.ndarray:
+    """Soft-weighted-jaccard for n token-list pairs.
 
-    Batch equivalent of ``similarity.soft_weighted_jaccard`` +
-    ``similarity.id_conflict``: same credits, same Fellegi-Sunter
-    digit-conflict denominator penalty, summation reordered only.
+    Batch equivalent of ``similarity.soft_weighted_jaccard``: same
+    credits, same Fellegi-Sunter digit-conflict denominator penalty,
+    summation reordered only.
     """
     n = len(toks_a)
     pa, fa = _flatten(toks_a)
@@ -267,7 +266,7 @@ def batch_soft_weighted_jaccard(toks_a: np.ndarray, toks_b: np.ndarray,
     den = den + np.where(conflict, conf_wa + conf_wb, 0.0)
     with np.errstate(divide="ignore", invalid="ignore"):
         jac = np.where(den > 0, num / den, 1.0)
-    return jac, conflict
+    return jac
 
 
 def batch_id_conflict(toks_a: np.ndarray, toks_b: np.ndarray) -> np.ndarray:

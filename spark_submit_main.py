@@ -3,11 +3,11 @@
     spark-submit --py-files dist/metasra_pipeline_spark.zip \\
         spark_submit_main.py --documents <path-or-table> \\
         --workdir <checkpoint dir> [--refdata <json>] [--er] \\
-        [--chunks N] [--snapshots icelite|dir]
+        [--chunks N]
 
 Runs the mapping pipeline (and optionally entity resolution) over an
-Iceberg table name or parquet path of span documents, with snapshot
-checkpoints under --workdir, and writes mapped_terms / real_values /
+Iceberg table name or parquet path of span documents, with IceLite
+snapshot checkpoints under --workdir, and writes mapped_terms / real_values /
 clusters plus the metrics tables.
 """
 
@@ -34,12 +34,6 @@ def main() -> None:
                     help="concurrent per-chunk pipelines (the reference's "
                          "Condor-chunk production shape); each chunk "
                          "snapshots and resumes independently")
-    ap.add_argument("--snapshots", choices=["icelite", "dir"],
-                    default="icelite",
-                    help="checkpoint flavor: 'icelite' = Iceberg-shaped "
-                         "atomic snapshot commits with per-data-file row "
-                         "counts in the manifest (per-partition lineage, "
-                         "time travel); 'dir' = plain parquet+_SUCCESS")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -77,17 +71,16 @@ def main() -> None:
     # --chunks > 1 each chunk snapshots under stages/chunk=<i> and a
     # failed chunk re-runs alone (reference: failed-Condor-chunk
     # re-submission, create_metasra/Snakefile:481-486)
-    snap_cls = (ops.IceLiteSnapshotter if args.snapshots == "icelite"
-                else ops.DirSnapshotter)
     if args.chunks > 1:
         def snap_factory(i: int):
-            return snap_cls(
+            return ops.IceLiteSnapshotter(
                 spark, os.path.join(args.workdir, "stages", f"chunk={i}"))
         res = run_chunked_pipeline(spark, documents, ref,
                                    n_chunks=args.chunks,
                                    snap_factory=snap_factory)
     else:
-        snap = snap_cls(spark, os.path.join(args.workdir, "stages"))
+        snap = ops.IceLiteSnapshotter(
+            spark, os.path.join(args.workdir, "stages"))
         res = run_mapping_pipeline(spark, documents, ref, snap=snap)
 
     ops.write_table(res.mapped_terms,
@@ -105,19 +98,15 @@ def main() -> None:
     if args.er:
         from metasra_pipeline_spark.er.resolution import (
             cluster_terms,
-            resolve_entities,
             resolve_entities_checkpointed,
         )
-        if args.snapshots == "icelite":
-            # resumable ER: er_profiles / er_reps / er_scored / er_labels
-            # each commit atomically; kill-and-rerun resumes after the
-            # last committed stage, and er_match_metrics commits alongside
-            er, _snap = resolve_entities_checkpointed(
-                spark, documents, workdir=os.path.join(args.workdir, "er"))
-        else:
-            er = resolve_entities(spark, documents)
-            ops.write_table(er["hot_keys"],
-                            os.path.join(args.workdir, "metrics_hot_keys"))
+        # resumable ER: er_profiles / er_reps / er_scored / er_labels
+        # each commit atomically; kill-and-rerun resumes after the last
+        # committed stage, and er_match_metrics commits alongside
+        er, _snap = resolve_entities_checkpointed(
+            spark, documents, workdir=os.path.join(args.workdir, "er"))
+        ops.write_table(er["hot_keys"],
+                        os.path.join(args.workdir, "metrics_hot_keys"))
         ops.write_table(er["clusters"], os.path.join(args.workdir, "clusters"))
         ops.write_table(cluster_terms(er["clusters"], res.mapped_terms),
                         os.path.join(args.workdir, "cluster_terms"))

@@ -195,3 +195,91 @@ def test_delta_candidate_pairs_rare_key_bypass(spark):
            .collect()}
     assert ("b1", "n1") in got            # rare shared key, new x base
     assert ("b2", "n2") not in got        # mid-df single key still pruned
+
+
+def _veto_scores(spark, kv_docs):
+    """score_pairs (IDF path) over every pair of ``kv_docs`` →
+    {(doc_a, doc_b): score}, plus the docs' token lists."""
+    from pyspark.sql import functions as F
+
+    from metasra_pipeline_spark.datagen import docs_from_kv
+    from metasra_pipeline_spark.er.resolution import doc_profiles, score_pairs
+
+    prof = doc_profiles(docs_from_kv(spark, kv_docs)).localCheckpoint()
+    ids = prof.select("doc_id")
+    pairs = (ids.alias("a").crossJoin(ids.alias("b"))
+             .where(F.col("a.doc_id") < F.col("b.doc_id"))
+             .select(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b")))
+    scored = score_pairs(pairs, prof, idf={}, default_idf=1.0,
+                         prefilter_jaccard=0.0)
+    toks = {r["doc_id"]: list(r["tokens"]) for r in prof.collect()}
+    return {(r["doc_a"], r["doc_b"]): r["score"]
+            for r in scored.collect()}, toks
+
+
+def test_id_veto_ignores_typo_and_differently_dropped_attributes(spark):
+    """The two noise shapes behind er_batch's misses: a typo splitting a
+    digit token (``2 Year old`` → ``2Y ear old``) and each side dropping
+    a different attribute (``h7`` vs ``1`` left over).  Both carry
+    unshared digit tokens on each side — the value-only veto capped
+    them — but no key carries different digits, so they score above the
+    cap."""
+    from metasra_pipeline_spark.functions.similarity import (
+        ID_CONFLICT_CAP,
+        id_conflict,
+    )
+
+    base = [("subject id", "cohort-alpha-000123"), ("cell type", "T cell"),
+            ("marker", "CD4+"), ("condition", "untreated control")]
+    line = [("subject id", "cohort-beta-000456"),
+            ("condition", "serum starved")]
+    scores, toks = _veto_scores(spark, [
+        ("t1", base + [("age", "2 Year old")]),
+        ("t2", base + [("age", "2Y ear old")]),
+        ("d1", line + [("cell line", "H7")]),
+        ("d2", line + [("passage", "1")]),
+    ])
+    for a, b in (("t1", "t2"), ("d1", "d2")):
+        assert id_conflict(toks[a], toks[b])   # the old veto fired
+        assert scores[(a, b)] > ID_CONFLICT_CAP + 0.05, (a, b, scores)
+
+
+def test_id_veto_caps_same_key_different_ids(spark):
+    """A true identifier conflict — the same key with different digits,
+    also across a key spelling variant — is still capped."""
+    from metasra_pipeline_spark.functions.similarity import ID_CONFLICT_CAP
+
+    rest = [("cell type", "T cell"), ("marker", "CD4+"),
+            ("condition", "untreated control"), ("age", "7 Year old")]
+    scores, _ = _veto_scores(spark, [
+        ("s1", [("subject id", "cohort-alpha-000123")] + rest),
+        ("s2", [("subject id", "cohort-alpha-000124")] + rest),
+        ("s3", [("subject_id", "cohort-alpha-000125")] + rest),
+    ])
+    assert scores[("s1", "s2")] == ID_CONFLICT_CAP
+    assert scores[("s1", "s3")] == ID_CONFLICT_CAP
+
+
+def test_kv_conflict_native_matches_scalar(spark):
+    """The native veto expression score_pairs evaluates ≡ the scalar
+    spec, on random multi-entry id_kv arrays."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from metasra_pipeline_spark.er.resolution import _KV_CONFLICT
+    from metasra_pipeline_spark.functions.similarity import kv_conflict
+
+    rng = random.Random(5)
+
+    def kv():
+        return sorted({f"{rng.choice('abc')}={rng.randrange(3)}"
+                       for _ in range(rng.randrange(0, 4))})
+
+    rows = [(kv(), kv()) for _ in range(400)]
+    df = spark.createDataFrame(rows, "kv_a array<string>, kv_b array<string>")
+    got = [r[0] for r in df.select(
+        F.expr(_KV_CONFLICT.format(a="kv_a", b="kv_b"))).collect()]
+    assert got == [kv_conflict(a, b) for a, b in rows]
+    assert any(got) and not all(got)

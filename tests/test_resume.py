@@ -2,11 +2,11 @@
 never recomputed (the round-1 resume path rebuilt everything from raw
 documents; this proves the fixed contract).
 
-Strategy: run the checkpointed pipeline to completion, wipe the
-snapshots *after* a chosen stage (simulating a kill there), then re-run
-with a POISONED documents frame.  If resume recomputed from documents,
-the output would reflect the poisoned input; identical output proves the
-surviving snapshots were read."""
+Strategy: run the checkpointed (IceLite) pipeline to completion, wipe
+the snapshots *after* a chosen stage (simulating a kill there), then
+re-run with a POISONED documents frame.  If resume recomputed from
+documents, the output would reflect the poisoned input; identical output
+proves the surviving snapshots were read."""
 
 import os
 import shutil
@@ -14,7 +14,8 @@ import shutil
 import pytest
 
 from metasra_pipeline_spark.datagen import docs_from_kv
-from metasra_pipeline_spark.ops import DirSnapshotter, run_checkpointed_pipeline
+from metasra_pipeline_spark.icelite import IceLiteTable
+from metasra_pipeline_spark.ops import run_icelite_pipeline
 
 
 @pytest.fixture()
@@ -37,7 +38,7 @@ def _rv_set(df):
 
 def test_kill_and_rerun_resumes_from_snapshots(spark, refdata, docs, tmp_path):
     wd = str(tmp_path / "wd")
-    mapped1, rv1 = run_checkpointed_pipeline(spark, docs, refdata, wd)
+    mapped1, rv1, _ = run_icelite_pipeline(spark, docs, refdata, wd)
     out1, rvs1 = _mapped_set(mapped1), _rv_set(rv1)
     assert out1, "pipeline produced terms"
 
@@ -47,6 +48,8 @@ def test_kill_and_rerun_resumes_from_snapshots(spark, refdata, docs, tmp_path):
                   "m_p3", "m_final", "inf_edges", "real_values",
                   "node_terms0", "node_terms", "mapped_terms"):
         assert stage in committed, f"missing snapshot for {stage}"
+        t = IceLiteTable.load(os.path.join(wd, stage))
+        assert t.snapshot_for_stage(stage) is not None, stage
 
     # simulate a kill right after the tok_final commit: wipe later stages
     survivors = {"kv", "deriv_expand", "tok_final"}
@@ -56,14 +59,13 @@ def test_kill_and_rerun_resumes_from_snapshots(spark, refdata, docs, tmp_path):
     # poisoned input: totally different doc — any recompute-from-documents
     # path would change kv and therefore the output
     poisoned = docs_from_kv(spark, [("zz", [("tissue", "liver")])])
-    mapped2, rv2 = run_checkpointed_pipeline(spark, poisoned, refdata, wd)
+    mapped2, rv2, snap2 = run_icelite_pipeline(spark, poisoned, refdata, wd)
     assert _mapped_set(mapped2) == out1
     assert _rv_set(rv2) == rvs1
+    assert survivors <= set(snap2.stages_resumed)
 
     # fully-committed re-run: every stage resumes, zero computed
-    snap = DirSnapshotter(spark, wd)
-    from metasra_pipeline_spark.plans.pipeline import run_mapping_pipeline
-    res = run_mapping_pipeline(spark, poisoned, refdata, snap=snap)
-    assert _mapped_set(res.mapped_terms) == out1
-    assert snap.stages_computed == []
-    assert "kv" in snap.stages_resumed and "m_final" in snap.stages_resumed
+    mapped3, _, snap3 = run_icelite_pipeline(spark, poisoned, refdata, wd)
+    assert _mapped_set(mapped3) == out1
+    assert snap3.stages_computed == []
+    assert "kv" in snap3.stages_resumed and "m_final" in snap3.stages_resumed

@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from metasra_pipeline_spark.ops import (
-    DirSnapshotter,
     IcebergSnapshotter,
     IceLiteSnapshotter,
     iceberg_available,
@@ -25,8 +24,6 @@ def _make(kind, spark, tmp_path, run: str):
     (simulating a new driver process resuming a prior run's workdir)."""
     if kind == "icelite":
         return IceLiteSnapshotter(spark, str(tmp_path / "wd"))
-    if kind == "dir":
-        return DirSnapshotter(spark, str(tmp_path / "wd"))
     if kind == "iceberg":
         if not iceberg_available(spark):
             pytest.skip("no Iceberg catalog configured (sandbox has no "
@@ -37,7 +34,7 @@ def _make(kind, spark, tmp_path, run: str):
     raise AssertionError(kind)
 
 
-@pytest.mark.parametrize("kind", ["icelite", "dir", "iceberg"])
+@pytest.mark.parametrize("kind", ["icelite", "iceberg"])
 def test_cut_commits_then_resumes_without_recompute(spark, tmp_path, kind):
     """Scenario 1+2: first cut computes and commits; a NEW snapshotter
     over the same store must return the COMMITTED rows even when handed
@@ -57,7 +54,7 @@ def test_cut_commits_then_resumes_without_recompute(spark, tmp_path, kind):
     assert snap2.stages_computed == []
 
 
-@pytest.mark.parametrize("kind", ["icelite", "dir", "iceberg"])
+@pytest.mark.parametrize("kind", ["icelite", "iceberg"])
 def test_stages_are_independent(spark, tmp_path, kind):
     """Scenario 3: committing stage_a must not mark stage_b resumable —
     a resumed run recomputes exactly the uncommitted suffix."""
@@ -71,7 +68,7 @@ def test_stages_are_independent(spark, tmp_path, kind):
     assert snap2.stages_computed == ["stage_b"]
 
 
-@pytest.mark.parametrize("kind", ["icelite", "dir", "iceberg"])
+@pytest.mark.parametrize("kind", ["icelite", "iceberg"])
 def test_committed_cut_is_a_lineage_cut(spark, tmp_path, kind):
     """The returned frame must read from the committed store, not
     re-derive the input subtree: its plan carries no dependency on the

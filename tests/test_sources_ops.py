@@ -1,9 +1,7 @@
-"""Sources (OBO / SPECIALIST / SQLite), ops (checkpoint/resume,
-metrics), multimodal plumbing, classifier."""
+"""Sources (OBO / SPECIALIST / SQLite), ops (partition metrics),
+multimodal plumbing, classifier."""
 
 import os
-
-from pyspark.sql import functions as F
 
 OBO_SAMPLE = """format-version: 1.2
 
@@ -86,21 +84,6 @@ def test_sqlite_roundtrip(spark, tmp_path):
     offsets = {tuple(s["offset"] for s in r["spans"])
                for r in docs.collect()}
     assert all(o == tuple(range(len(o))) for o in offsets)
-
-
-def test_checkpoint_resume(spark, tmp_path):
-    from metasra_pipeline_spark.ops import checkpointed
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return spark.range(5).withColumn("x", F.col("id") * 2)
-
-    path = str(tmp_path / "ck")
-    a = checkpointed(spark, path, build).collect()
-    b = checkpointed(spark, path, build).collect()  # resume: no recompute
-    assert calls["n"] == 1
-    assert sorted(r["x"] for r in a) == sorted(r["x"] for r in b)
 
 
 def test_partition_metrics(spark):
