@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..refdata import local_frame
 from .resolution import (
     MIN_SHARED,
     RARE_DF,
@@ -154,8 +155,8 @@ def _delta_cc(edges: DataFrame, small_graph_cap: int,
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
             rows = [(n, find(n)) for n in parent]
-            return edges.sparkSession.createDataFrame(
-                rows, "doc_id string, cluster_id string")
+            return local_frame(edges.sparkSession, rows,
+                               "doc_id string, cluster_id string")
     return connected_components(edges, checkpoint=checkpoint)
 
 
@@ -434,9 +435,9 @@ def incremental_resolve_checkpointed(spark: SparkSession, workdir: str,
     mpath = _os.path.join(workdir, "er_landing_metrics")
     mt = (IceLiteTable.load(mpath) if IceLiteTable.exists(mpath)
           else IceLiteTable.create(mpath))
-    metrics = spark.createDataFrame(
-        [(n_new, int(pair_stats["n_pairs"]),
-          int(pair_stats["n_accepted"] or 0), n_merges)],
+    metrics = local_frame(
+        spark, [(n_new, int(pair_stats["n_pairs"]),
+                 int(pair_stats["n_accepted"] or 0), n_merges)],
         "n_new_docs long, n_pairs long, n_accepted long, n_merges long")
     mt.commit(metrics, operation="append", stage="er_landing_metrics")
     res["landing_metrics"] = mt.read(spark)

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..refdata import local_frame
+
 
 _STOPWORDS = {
     "the", "and", "for", "with", "from", "this", "that", "was", "were",
@@ -358,8 +360,8 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
     if aug:
         idf_df = None
         if idf:
-            idf_df = spark.createDataFrame(
-                [(k, float(v)) for k, v in idf.items()],
+            idf_df = local_frame(
+                spark, [(k, float(v)) for k, v in idf.items()],
                 "tok string, idf double")
         prof = augment_profiles(profiles, idf_df, default_idf)
         # the augmented frame feeds BOTH sides of the pairs join —

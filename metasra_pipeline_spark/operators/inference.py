@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..refdata import RefData
+from ..refdata import RefData, local_frame
 from .stages import key_side_targets
 
 INF_COLS = ["doc_id", "src_id", "dst_id", "itype"]
@@ -51,8 +51,9 @@ def consequent_cultured_cell(terms: DataFrame) -> DataFrame:
     cvcl = terms.where(F.split("term_id", ":").getItem(0) == "CVCL")
     return (cvcl.select("doc_id", F.col("term_id").alias("src_id"))
             .crossJoin(F.broadcast(
-                cvcl.sparkSession.createDataFrame(
-                    [("CL:0000010",), ("EFO_BTO:0000214",)], "dst_id: string")))
+                local_frame(cvcl.sparkSession,
+                            [("CL:0000010",), ("EFO_BTO:0000214",)],
+                            "dst_id: string")))
             .withColumn("itype", F.lit("Cell culture from cell line")))
 
 
@@ -77,8 +78,9 @@ def implied_developmental_stage(real_values: DataFrame) -> DataFrame:
         & (F.col("value") > 18))
     spark = real_values.sparkSession
     return (adult.select("doc_id").distinct()
-            .crossJoin(F.broadcast(spark.createDataFrame(
-                [("EFO:0001272",), ("UBERON:0007023",)], "dst_id: string")))
+            .crossJoin(F.broadcast(local_frame(
+                spark, [("EFO:0001272",), ("UBERON:0007023",)],
+                "dst_id: string")))
             # src carries the property id so provenance can walk back to
             # the age kv pair (the reference's real-value node)
             .select("doc_id", F.lit("RV:EFO:0000246").alias("src_id"),

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..refdata import RefData
+from ..refdata import RefData, local_frame
 
 TOK_COLS = ["doc_id", "token", "start", "end"]
 MATCH_COLS = ["doc_id", "token", "start", "end", "target_id",
@@ -324,8 +324,8 @@ def parse_time_with_unit(kv: DataFrame, tok: DataFrame, matches: DataFrame,
     expanded unit synonym 'hour'.  With ``with_edges`` also returns the
     DerivesInto("Parse time and unit") / ("Parse as unit synonym")
     derivation edges (:1415-1427)."""
-    time_ids = spark.createDataFrame([(t,) for t in ref.time_keys],
-                                     "target_id: string")
+    time_ids = local_frame(spark, [(t,) for t in ref.time_keys],
+                           "target_id: string")
     gated_kv = (key_side_targets(kv, matches)
                 .join(F.broadcast(time_ids), on="target_id")
                 .select("doc_id", "val_start", "val_end").distinct())
@@ -344,7 +344,8 @@ def parse_time_with_unit(kv: DataFrame, tok: DataFrame, matches: DataFrame,
         "doc_id", F.col("u").alias("token"),
         (F.col("end") - F.length("u")).cast("int").alias("start"),
         F.col("end").alias("end"))
-    exp_map = spark.createDataFrame(_UNIT_EXPANSION, "token: string, expansion: string")
+    exp_map = local_frame(spark, _UNIT_EXPANSION,
+                          "token: string, expansion: string")
     unit_syn = (unit_toks.join(F.broadcast(exp_map), on="token")
                 .select("doc_id", F.col("expansion").alias("token"),
                         "start", "end"))

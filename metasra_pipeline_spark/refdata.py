@@ -3,9 +3,12 @@
 The reference engine loads its lookup structures eagerly per stage
 (marisa trie ``pipeline_components.py:771-791``, BK-tree pickle
 ``pipeline_components.py:852-859``, JSON overlays).  Here the whole layer
-is a :class:`RefData` bundle of small DataFrames that Catalyst broadcasts
-automatically (all ≲10⁶ rows, far under the broadcast threshold), plus the
-same data as plain dicts for use inside vectorized pandas UDFs.
+is a :class:`RefData` bundle of DataFrames built on the driver by
+:func:`local_frame`: up to :data:`LOCAL_MAX_BYTES` a table goes to the JVM
+once, as Arrow batches, and is a ``LocalRelation`` that Catalyst inlines
+and broadcasts without a Python worker; a larger one (a full-size
+lexicon) stays a pickled ``createDataFrame`` frame of unknown size,
+planned like any large scan.
 
 Source of truth is a JSON fixture (``resources/fixture_refdata.json``)
 whose *formats* mirror the reference's metadata files; a full-size lexicon
@@ -20,15 +23,53 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 DEFAULT_REFDATA = os.path.join(_HERE, "resources", "fixture_refdata.json")
 
+#: Arrow bytes up to which :func:`local_frame` builds a ``LocalRelation``.
+#: Its exact statistics let Catalyst broadcast a side that an explode then
+#: multiplies (``fuzzy_match``: up to ~400 deletion keys per lexicon
+#: string); 128 KiB x 400 stays under the session's 64 MB broadcast
+#: threshold, and the fixture lexicon is 5 KiB.  Spark's own Arrow path
+#: for larger tables (a JVM-side RDD of Arrow batches) was measured to
+#: grow the driver from 4 GB to an OOM kill at 15 GB on a 300k-string
+#: lexicon (``tests/test_lexicon_scale.py`` after
+#: ``tests/test_lexicon_build.py``), so larger tables keep the pickled path.
+LOCAL_MAX_BYTES = 128 * 1024
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s DDL
+    column order); up to :data:`LOCAL_MAX_BYTES` no job reads it through a
+    Python worker.
+
+    ``createDataFrame(list)`` plans a ``LogicalRDD`` over a ``PythonRDD``,
+    so every job that scans it pickles the rows again in Python tasks.
+    An Arrow table goes to the JVM once and plans as a ``LocalRelation``.
+    Built from pyarrow, not pandas: an empty pandas frame falls back to
+    the pickled path.
+    """
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    if table.nbytes > LOCAL_MAX_BYTES:
+        return spark.createDataFrame(rows, schema=struct)
+    return spark.createDataFrame(table, schema=struct)
+
 
 @dataclass
 class RefData:
-    """Broadcastable reference tables + dict mirrors for UDFs."""
+    """The reference side tables as JVM-local DataFrames (see
+    :func:`local_frame`), plus the raw dict and the short key lists."""
 
     raw: dict[str, Any]
     lexicon: DataFrame          # (string, term_id, match_target, ont, exact_ok, fuzzy_ok)
@@ -58,25 +99,6 @@ class RefData:
     cvcl_syn_sets: DataFrame | None = None  # (set_id, member) — T7
     atcc_filter_keys: DataFrame | None = None    # (key,)   — F2
     atcc_filter_values: DataFrame | None = None  # (value,) — F2
-
-    # ---- dict mirrors for pandas UDFs (Arrow-shipped via closure) ----
-    @property
-    def fuzzy_lexicon_dict(self) -> dict[str, list[tuple[str, str]]]:
-        """string -> [(term_id, match_target), ...] over fuzzy-matchable onts.
-
-        Mirrors the reference's ``str_to_terms`` sidecar
-        (pipeline_components.py:852-859).
-        """
-        out: dict[str, list[tuple[str, str]]] = {}
-        fuzzy_onts = set(self.raw["fuzzy_match_onts"])
-        for t in self.raw["terms"]:
-            if t["ont"] not in fuzzy_onts and t["id"].split(":")[0] not in fuzzy_onts:
-                continue
-            out.setdefault(t["name"], []).append((t["id"], "TERM_NAME"))
-            for syn, styp in t["syns"]:
-                if syn != t["name"]:
-                    out.setdefault(syn, []).append((t["id"], f"{styp}_SYNONYM"))
-        return out
 
 
 def _lexicon_rows(raw: dict[str, Any]) -> list[tuple]:
@@ -126,13 +148,12 @@ def load_refdata(spark: SparkSession, path: str | None = None) -> RefData:
 
 
 def refdata_from_raw(spark: SparkSession, raw: dict[str, Any]) -> RefData:
-    """Build the broadcastable RefData bundle from a raw dict (the JSON
+    """Build the RefData bundle from a raw dict (the JSON
     fixture's in-memory form; tests construct minimal ones from
     ``EMPTY_RAW``)."""
 
     def df(data: list[tuple], schema: str) -> DataFrame:
-        return spark.createDataFrame(data, schema=schema) if data else \
-            spark.createDataFrame([], schema=schema)
+        return local_frame(spark, data, schema)
 
     lexicon = df(_lexicon_rows(raw),
                  "string: string, term_id: string, match_target: string, "

@@ -354,3 +354,30 @@ def test_cosine_neardup_numpy_attach_bit_identical(spark):
     np_ = {(r["id_a"], r["id_b"]): r["cosine"]
            for r in cosine_near_dup_pairs(emb, numpy_attach=True).collect()}
     assert jvm == np_ and len(jvm) > 0
+
+
+def test_cosine_neardup_numpy_attach_double_vectors_and_unique_ids(spark):
+    """array<double> input: the numpy attach keeps full double precision,
+    so its raw cosines equal the JVM attach-join's bit for bit (a float32
+    round trip would not); duplicate ids are refused on the numpy path,
+    which cannot emit the JVM join's one row per duplicate combination."""
+    import pytest
+
+    from metasra_pipeline_spark.functions.dedup import cosine_near_dup_pairs
+
+    emb = (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+           .withColumn("embedding", F.transform(
+               "embedding", lambda x: x.cast("double") / F.lit(3.0))))
+    assert emb.schema["embedding"].dataType.simpleString() == "array<double>"
+
+    def pairs(np_attach):
+        return {(r["id_a"], r["id_b"]): r["cosine"]
+                for r in cosine_near_dup_pairs(
+                    emb, round_to=17, numpy_attach=np_attach).collect()}
+
+    jvm = pairs(False)
+    assert jvm and pairs(True) == jvm
+
+    dup = emb.unionByName(emb.limit(1))
+    with pytest.raises(ValueError, match="duplicate"):
+        cosine_near_dup_pairs(dup, numpy_attach=True)
