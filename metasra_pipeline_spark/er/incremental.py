@@ -117,8 +117,7 @@ def delta_candidate_pairs(new_keys: DataFrame, base_keys: DataFrame,
             .drop("n_shared"))
 
 
-def _delta_cc(edges: DataFrame, small_graph_cap: int,
-              checkpoint: bool = True) -> DataFrame:
+def _delta_cc(edges: DataFrame, small_graph_cap: int) -> DataFrame:
     """Connected components sized for a DELTA graph.
 
     The contracted delta graph has O(new docs + touched clusters)
@@ -157,7 +156,7 @@ def _delta_cc(edges: DataFrame, small_graph_cap: int,
             rows = [(n, find(n)) for n in parent]
             return local_frame(edges.sparkSession, rows,
                                "doc_id string, cluster_id string")
-    return connected_components(edges, checkpoint=checkpoint)
+    return connected_components(edges)
 
 
 def incremental_resolve(spark: SparkSession,
@@ -174,7 +173,6 @@ def incremental_resolve(spark: SparkSession,
                         idf: dict[str, float] | None = None,
                         default_idf: float = 10.0,
                         small_graph_cap: int = 1_000_000,
-                        checkpoint: bool = True,
                         scorer: str = "softtfidf") -> dict[str, DataFrame]:
     """Resolve ``new_documents`` against an existing clustering.
 
@@ -206,17 +204,13 @@ def incremental_resolve(spark: SparkSession,
     """
     if scorer not in ("softtfidf", "native"):
         raise ValueError(f"unknown scorer {scorer!r}")
-    newp = doc_profiles(new_documents)
-    if checkpoint:
-        newp = newp.localCheckpoint(eager=True)
+    newp = doc_profiles(new_documents).localCheckpoint(eager=True)
     if base_reps is None:
         base_reps = representative_profiles(base_profiles)
 
     # dedup-within-batch: one rep per distinct new profile; members
     # attach via star edges exactly like the batch path
-    new_reps = representative_profiles(newp)
-    if checkpoint:
-        new_reps = new_reps.localCheckpoint(eager=True)
+    new_reps = representative_profiles(newp).localCheckpoint(eager=True)
     doc_rep, star = _doc_rep_star(newp, new_reps)
 
     # exact-profile attach: a new rep whose profile already exists in
@@ -229,9 +223,8 @@ def incremental_resolve(spark: SparkSession,
               .select(F.col("n.doc_id").alias("doc_a"),
                       F.col("o.doc_id").alias("doc_b"),
                       F.lit(1.0).alias("score"),
-                      F.lit(False).alias("rejected")))
-    if checkpoint:
-        attach = attach.localCheckpoint(eager=True)
+                      F.lit(False).alias("rejected"))
+              .localCheckpoint(eager=True))
     unseen = new_reps.join(attach.select(F.col("doc_a").alias("doc_id")),
                            on="doc_id", how="left_anti")
 
@@ -254,20 +247,18 @@ def incremental_resolve(spark: SparkSession,
     sizes = (new_keys.select("key", "doc_id")
              .unionByName(base_touched.select("key", "doc_id"))
              .groupBy("key")
-             .agg(F.countDistinct("doc_id").alias("n_docs")))
-    if checkpoint:
-        # sizes is consumed twice (hot-cap filter + rare-key df join in
-        # delta_candidate_pairs); without a cut each use re-executes the
-        # whole combined-key subtree, including the O(base) key scan
-        sizes = sizes.localCheckpoint(eager=True)
+             .agg(F.countDistinct("doc_id").alias("n_docs"))
+             # consumed twice (hot-cap filter + rare-key df join in
+             # delta_candidate_pairs); without a cut each use re-executes
+             # the whole combined-key subtree, including the O(base) scan
+             .localCheckpoint(eager=True))
     hot_new = sizes.where(F.col("n_docs") > max_block)
     new_keys = new_keys.join(hot_new.select("key"), on="key",
                              how="left_anti")
-    pairs = delta_candidate_pairs(new_keys, base_keys,
-                                  min_shared=min_shared,
-                                  key_df=sizes, rare_df=rare_df)
-    if checkpoint:
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = (delta_candidate_pairs(new_keys, base_keys,
+                                   min_shared=min_shared,
+                                   key_df=sizes, rare_df=rare_df)
+             .localCheckpoint(eager=True))
     # full-corpus IDF (base ∪ new).  Recomputing it is an O(base)
     # explode+groupBy per landing; production passes the prior run's
     # stored head via ``idf``/``default_idf`` (the Zipf head is stable
@@ -294,8 +285,7 @@ def incremental_resolve(spark: SparkSession,
         scored = score_pairs(pairs, prof_union, idf=idf,
                              default_idf=default_idf,
                              reject_below=threshold)
-    if checkpoint:
-        scored = scored.localCheckpoint(eager=True)
+    scored = scored.localCheckpoint(eager=True)
 
     accepted = (scored.where(~F.col("rejected"))
                 .where(F.col("score") >= threshold)
@@ -315,11 +305,9 @@ def incremental_resolve(spark: SparkSession,
                 .drop(f"_c_{col}"))
 
     delta_edges = (contract(contract(accepted, "doc_a"), "doc_b")
-                   .where(F.col("doc_a") != F.col("doc_b")))
-    if checkpoint:
-        delta_edges = delta_edges.localCheckpoint(eager=True)
-    labels = _delta_cc(delta_edges, small_graph_cap,
-                       checkpoint=checkpoint)
+                   .where(F.col("doc_a") != F.col("doc_b"))
+                   .localCheckpoint(eager=True))
+    labels = _delta_cc(delta_edges, small_graph_cap)
 
     # merge log: a base cluster super-node relabeled by the delta CC
     base_cids = base_clusters.select(

@@ -18,6 +18,15 @@ blocking → pairwise scoring → transitive clustering:
 5. **Consolidation**: per-cluster canonical mapped-term set
    (build_metasra_database_files.py:48-110 at cluster grain).
 
+:func:`resolve_entities` is the one orchestration body for steps 1-4.
+Its stage boundaries (``er_profiles``, ``er_reps``, ``er_scored``,
+``er_labels``) are cuts of the ``snap=`` :class:`..ops.Snapshotter`
+it is handed — in-memory by default, durable and resumable under
+IceLite or real Iceberg — exactly as ``run_mapping_pipeline(snap=...)``
+does for the mapping pipeline.  :func:`resolve_entities_native` (the
+SQL-oracled scorer) and :func:`resolve_entities_checkpointed` (the
+IceLite-committed run) are thin wrappers of it.
+
 The reference has no cross-doc clustering (its Condor jobs are
 shared-nothing, create_condorized_pipeline.py:81-119); BASELINE.json
 north_rule makes it explicit.
@@ -26,12 +35,14 @@ north_rule makes it explicit.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..ops import IceLiteSnapshotter, LocalSnapshotter, Snapshotter
 from ..refdata import local_frame
 
 
@@ -156,7 +167,7 @@ _PAIR_SCHEMA = T.StructType([
 
 
 #: meta-blocking defaults shared by every caller of candidate_pairs —
-#: resolve_entities_checkpointed records them as er_scored's identity
+#: resolve_entities records them in er_scored's identity
 MIN_SHARED = 2
 RARE_DF = 16
 
@@ -313,8 +324,7 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
                 idf: dict[str, float] | None = None,
                 default_idf: float = 10.0,
                 prefilter_jaccard: float = 0.2,
-                reject_below: float | None = None,
-                bound_skip_jaccard: float | None = None) -> DataFrame:
+                reject_below: float | None = None) -> DataFrame:
     """(doc_a, doc_b, score, rejected) via one mapInPandas pass fusing
     IDF-weighted token similarity + JW + Levenshtein-ratio (vectorized
     Arrow batches).
@@ -342,13 +352,7 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
 
     A per-row short-circuit keeps the HOF bound off byte-identical
     profiles (lazy IF — the bound expression never evaluates; they
-    score 1.0 directly).  ``bound_skip_jaccard``, when set, ALSO skips
-    the bound for pairs whose exact unweighted Jaccard ``j0`` is
-    already ≥ the cutoff, sending them straight to the Python kernel.
-    It defaults OFF: measured at 2k/20k synth docs, skipping the bound
-    at j0 ≥ 0.5 made ER 2.7×/1.1× SLOWER — the native bound still
-    rejects a large share of mid-Jaccard pairs, and evaluating it is
-    far cheaper than the per-row kernel it would hand those pairs to.
+    score 1.0 directly).
     """
     import os as _os
 
@@ -435,9 +439,7 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
         # digit tokens earn only exact credit (mutually-exclusive digit
         # tokens additionally inflate the denominator); JW ≤ 1.
         # Lazy IF: identical profiles never evaluate the HOF bound at
-        # all (2.0 = "must run the kernel"); a j0-based skip is opt-in
-        # via bound_skip_jaccard (measured slower as a default — see
-        # docstring).
+        # all (2.0 = "must run the kernel").
         # NOTE a two-tier "skip levenshtein when the token-only bound
         # already rejects" variant was measured WORSE (70 s vs 51 s at
         # 300k docs): the tier needs the token bound referenced from two
@@ -459,13 +461,12 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
             "cast(0 as double))")
         bound = (f"0.65 * IF(({den}) = 0, cast(1.0 as double), "
                  f"({num_ub}) / ({den})) + 0.15 * lr + 0.2")
-        skip = "prof_a = prof_b"
-        if bound_skip_jaccard is not None:
-            skip += f" OR j0 >= {bound_skip_jaccard}"
+        # also skipping pairs with j0 >= 0.5 measured 2.7x / 1.1x SLOWER
+        # at 2k / 20k synth docs: the bound is far cheaper than the kernel
         enriched = (enriched
                     .withColumn("lr", F.expr(lr_expr))
                     .withColumn("upper", F.expr(
-                        f"IF({skip}, cast(2.0 as double), {bound})")))
+                        f"IF(prof_a = prof_b, cast(2.0 as double), {bound})")))
     else:
         enriched = enriched.withColumn("lr", F.expr(lr_expr))
     if key_veto:
@@ -563,7 +564,6 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
 
 # ------------------------------------------------------------------ 4
 def connected_components(edges: DataFrame, max_iter: int = 20,
-                         checkpoint: bool = True,
                          num_salts: int = 0) -> DataFrame:
     """Alternating large-star / small-star CC → (doc_id, cluster_id).
 
@@ -630,10 +630,9 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     # symmetric edge list (u, v), self-loops implicit via least() below
     e = sym_dedup(edges.select(F.col("doc_a").alias("u"),
                                F.col("doc_b").alias("v")))
-    if checkpoint:
-        # lazy: the convergence test below materializes the checkpoint
-        # and answers in the same driver sync
-        e = e.localCheckpoint(eager=False)
+    # lazy: the convergence test below materializes the checkpoint and
+    # answers in the same driver sync
+    e = e.localCheckpoint(eager=False)
 
     def min_neighbor(E: DataFrame) -> DataFrame:
         return (E.groupBy("u")
@@ -656,9 +655,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
                     .select(F.col("v").alias("u"), F.col("m").alias("v"))
                     .unionByName(m.select(F.col("u"), F.col("m").alias("v"))))
         ss = ss_pairs.where(F.col("u") != F.col("v"))
-        e = sym_dedup(ss)
-        if checkpoint:
-            e = e.localCheckpoint(eager=False)
+        e = sym_dedup(ss).localCheckpoint(eager=False)
 
     # after convergence every node points at its component minimum
     labels = (e.groupBy("u").agg(F.min("v").alias("root"))
@@ -683,83 +680,6 @@ def cluster_terms(clusters: DataFrame, mapped_terms: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------ harness
-def resolve_entities_native(spark: SparkSession, documents: DataFrame,
-                            threshold: float = 0.65,
-                            max_block: int = 200,
-                            rare_df: int = RARE_DF,
-                            checkpoint: bool = True) -> dict[str, DataFrame]:
-    """ER with the NATIVE-ONLY scorer — a deterministic, SQL-expressible
-    configuration used as the DuckDB-oracled correctness anchor for the
-    full pipeline (driver query q93_er_native).
-
-    Same operators as :func:`resolve_entities` (dedup-before-blocking,
-    token blocking with hot-key cap, meta-blocking min_shared=2,
-    star-contracted connected components); the scorer drops the IDF
-    SoftTFIDF kernel for the closed-form composite
-    ``0.65·exact-token-Jaccard + 0.15·levenshtein-ratio + 0.2·JW`` —
-    every term replicable in ANSI-ish SQL (DuckDB ``jaro_similarity`` +
-    explicit Winkler prefix boost, native ``levenshtein``, list ops),
-    so blocking, scoring, thresholding AND the transitive clustering are
-    all checked hash-exact against an independent engine.  ``ngram=0``
-    keeps the oracle's blocking CTE to token keys.
-    """
-    profiles = doc_profiles(documents)
-    if checkpoint:
-        profiles = profiles.localCheckpoint(eager=True)
-    reps = representative_profiles(profiles)
-    if checkpoint:
-        reps = reps.localCheckpoint(eager=True)
-    keys, hot = blocking_keys(reps, ngram=0, max_block=max_block)
-    pairs = candidate_pairs(keys, rare_df=rare_df)
-    scored = score_pairs(pairs, reps, idf=None, reject_below=None)
-    star, labels = _star_and_labels(profiles, reps, scored, threshold,
-                                    checkpoint=checkpoint)
-    clusters = assign_clusters(documents, labels)
-    return {"profiles": profiles, "pairs": scored.unionByName(star),
-            "clusters": clusters, "hot_keys": hot}
-
-
-def resolve_entities(spark: SparkSession, documents: DataFrame,
-                     threshold: float = 0.65, ngram: int = 4,
-                     max_block: int = 200, rare_df: int = RARE_DF,
-                     checkpoint: bool = True) -> dict[str, DataFrame]:
-    """Full ER pass → {profiles, pairs, clusters, metrics}."""
-    profiles = doc_profiles(documents)
-    if checkpoint:
-        profiles = profiles.localCheckpoint(eager=True)
-    # IDF over the FULL corpus (true document frequencies, dups and all)
-    # and the rep dedup both depend only on the materialized profiles —
-    # run the IDF collect and the reps checkpoint CONCURRENTLY (guide
-    # §2.6; FAIR scheduler is session default).
-    # dedup-before-ER: blocking + pairwise scoring see one rep per
-    # distinct profile; identical-profile members attach via star edges
-    # and CC merges the groups — pair volume shrinks quadratically in
-    # dup-heavy data with identical clustering output
-    if checkpoint:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as _ex:
-            _f_idf = _ex.submit(token_idf, profiles)
-            _f_reps = _ex.submit(
-                lambda: representative_profiles(profiles)
-                .localCheckpoint(eager=True))
-            (idf, default_idf), reps = _f_idf.result(), _f_reps.result()
-    else:
-        idf, default_idf = token_idf(profiles)
-        reps = representative_profiles(profiles)
-    keys, hot = blocking_keys(reps, ngram=ngram, max_block=max_block)
-    pairs = candidate_pairs(keys, rare_df=rare_df)
-    scored = score_pairs(pairs, reps, idf=idf, default_idf=default_idf,
-                         reject_below=threshold)
-    if checkpoint:
-        scored = scored.localCheckpoint(eager=True)
-    star, labels = _star_and_labels(profiles, reps, scored, threshold,
-                                    checkpoint=checkpoint)
-    all_pairs = scored.unionByName(star)
-    clusters = assign_clusters(documents, labels)
-    return {"profiles": profiles, "pairs": all_pairs, "clusters": clusters,
-            "hot_keys": hot}
-
-
 def _doc_rep_star(profiles: DataFrame,
                   reps: DataFrame) -> tuple[DataFrame, DataFrame]:
     """doc→rep map + exact-dup star edges: identical-profile docs link
@@ -778,135 +698,142 @@ def _doc_rep_star(profiles: DataFrame,
     return doc_rep, star
 
 
-def _star_and_labels(profiles: DataFrame, reps: DataFrame,
-                     scored: DataFrame, threshold: float,
-                     checkpoint: bool = True
-                     ) -> tuple[DataFrame, DataFrame]:
-    """Shared post-scoring graph stage: exact-dup star edges + star-
-    contracted CC + per-doc labels.
+def _identity(threshold: float, ngram: int, max_block: int,
+              scorer: str) -> dict:
+    """What er_scored, er_labels and er_match_metrics depend on beyond
+    their input frames: a durable snapshot resumes only under the same
+    blocking and scoring parameters."""
+    return {"blocking-min-shared": MIN_SHARED, "blocking-rare-df": RARE_DF,
+            "blocking-max-block": max_block, "blocking-ngram": ngram,
+            "score-threshold": threshold, "scorer": scorer}
 
-    Star contraction: the iterative CC only ever sees the rep-level
-    near-dup graph (scored pairs are rep-vs-rep by construction);
-    identical-profile members attach to their rep's component with one
-    narrow join afterwards instead of O(log n) rounds of star edges."""
+
+def resolve_entities(spark: SparkSession, documents: DataFrame,
+                     threshold: float = 0.65, ngram: int = 4,
+                     max_block: int = 200,
+                     snap: Snapshotter | None = None, *,
+                     _scorer: str = "softtfidf") -> dict[str, DataFrame]:
+    """Full ER pass → {profiles, pairs, clusters, hot_keys,
+    match_metrics}.
+
+    ``snap`` (a :class:`..ops.Snapshotter`, default in-memory
+    :class:`..ops.LocalSnapshotter`) makes every durability decision:
+    ``er_profiles``, ``er_reps``, ``er_scored`` (blocking + pairwise
+    scoring, the wall) and ``er_labels`` (transitive clustering) are
+    its cuts.  ``er_scored`` and ``er_labels`` carry the blocking and
+    scoring parameters as their identity, so a durable snapshotter
+    resumes them only for a re-run with the same parameters, and a
+    committed ``er_scored`` skips blocking, the IDF collect and the
+    Arrow scoring kernel entirely.  ``match_metrics`` (candidate /
+    accepted / rejected / star-edge pair counts) is returned lazy.
+
+    ``_scorer="native"`` is :func:`resolve_entities_native`'s
+    configuration (no IDF, no native bound)."""
+    if snap is None:
+        snap = LocalSnapshotter()
+    native = _scorer == "native"
+    identity = _identity(threshold, ngram, max_block, _scorer)
+    profiles = snap.cut(doc_profiles(documents), "er_profiles")
+    # checked before the IDF collect: a committed er_scored needs no IDF
+    scored = snap.committed("er_scored", identity)
+    # IDF over the FULL corpus (true document frequencies, dups and all)
+    # and the rep dedup both depend only on the materialized profiles —
+    # run the IDF collect and the reps cut CONCURRENTLY (guide §2.6;
+    # FAIR scheduler is session default).
+    # dedup-before-ER: blocking + pairwise scoring see one rep per
+    # distinct profile; identical-profile members attach via star edges
+    # and CC merges the groups — pair volume shrinks quadratically in
+    # dup-heavy data with identical clustering output
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        f_reps = ex.submit(lambda: snap.cut(
+            representative_profiles(profiles), "er_reps"))
+        f_idf = (ex.submit(token_idf, profiles)
+                 if scored is None and not native else None)
+        reps = f_reps.result()
+        idf, default_idf = f_idf.result() if f_idf else (None, 10.0)
+    keys, hot = blocking_keys(reps, ngram=ngram, max_block=max_block)
+    if scored is None:
+        scored = snap.cut(
+            score_pairs(candidate_pairs(keys), reps, idf=idf,
+                        default_idf=default_idf,
+                        reject_below=None if native else threshold),
+            "er_scored", identity)
+
+    # Star contraction: the iterative CC only ever sees the rep-level
+    # near-dup graph (scored pairs are rep-vs-rep by construction);
+    # identical-profile members attach to their rep's component with one
+    # narrow join afterwards instead of O(log n) rounds of star edges.
     doc_rep, star = _doc_rep_star(profiles, reps)
-    rep_edges = (scored.where(F.col("score") >= threshold)
-                 .where(~F.col("rejected")))
-    rep_labels = connected_components(rep_edges, checkpoint=checkpoint)
-    labels = (doc_rep
-              .join(rep_labels.withColumnRenamed("doc_id", "rep"),
-                    on="rep", how="left")
-              .select("doc_id",
-                      F.coalesce("cluster_id", "rep").alias("cluster_id")))
-    return star, labels
+    # checked before connected_components, which runs its
+    # driver-synchronized rounds EAGERLY at construction
+    labels = snap.committed("er_labels", identity)
+    if labels is None:
+        rep_edges = (scored.where(F.col("score") >= threshold)
+                     .where(~F.col("rejected")))
+        rep_labels = connected_components(rep_edges)
+        labels = snap.cut(
+            doc_rep.join(rep_labels.withColumnRenamed("doc_id", "rep"),
+                         on="rep", how="left")
+            .select("doc_id",
+                    F.coalesce("cluster_id", "rep").alias("cluster_id")),
+            "er_labels", identity)
+    clusters = assign_clusters(documents, labels)
+    metrics = (scored
+               .select(F.count("*").alias("candidate_pairs"),
+                       F.sum(((F.col("score") >= threshold)
+                              & ~F.col("rejected")).cast("long"))
+                       .alias("accepted_pairs"),
+                       F.sum(F.col("rejected").cast("long"))
+                       .alias("rejected_pairs"))
+               .crossJoin(star.select(F.count("*").alias("star_edges"))))
+    return {"profiles": profiles, "pairs": scored.unionByName(star),
+            "clusters": clusters, "hot_keys": hot,
+            "match_metrics": metrics}
+
+
+def resolve_entities_native(spark: SparkSession, documents: DataFrame,
+                            threshold: float = 0.65,
+                            max_block: int = 200) -> dict[str, DataFrame]:
+    """ER with the NATIVE-ONLY scorer — a deterministic, SQL-expressible
+    configuration used as the DuckDB-oracled correctness anchor for the
+    full pipeline (driver query q93_er_native).
+
+    Same body as :func:`resolve_entities` (dedup-before-blocking,
+    token blocking with hot-key cap, meta-blocking min_shared=2,
+    star-contracted connected components); the scorer drops the IDF
+    SoftTFIDF kernel for the closed-form composite
+    ``0.65·exact-token-Jaccard + 0.15·levenshtein-ratio + 0.2·JW`` —
+    every term replicable in ANSI-ish SQL (DuckDB ``jaro_similarity`` +
+    explicit Winkler prefix boost, native ``levenshtein``, list ops),
+    so blocking, scoring, thresholding AND the transitive clustering are
+    all checked hash-exact against an independent engine.  ``ngram=0``
+    keeps the oracle's blocking CTE to token keys.
+    """
+    return resolve_entities(spark, documents, threshold=threshold,
+                            ngram=0, max_block=max_block, _scorer="native")
 
 
 def resolve_entities_checkpointed(spark: SparkSession, documents: DataFrame,
                                   workdir: str, threshold: float = 0.65,
                                   ngram: int = 4, max_block: int = 200):
-    """The record-linkage pipeline resumable from Iceberg-shaped
-    snapshot checkpoints (BASELINE.json north_rule): the expensive
-    stage boundaries — ``er_profiles``, ``er_reps``, ``er_scored``
-    (blocking + pairwise scoring, the wall), ``er_labels`` (transitive
-    clustering) — each commit ATOMICALLY to an IceLite table under
-    ``workdir`` with per-data-file row counts in the manifest (the
-    per-partition lineage), and an ``er_match_metrics`` table
-    (candidate / accepted / rejected / star-edge pair counts) commits
-    alongside.  Kill the job between any two commits and a re-run
-    resumes from the last committed snapshot: in particular a committed
-    ``er_scored`` skips blocking, the IDF collect and the Arrow scoring
-    kernel entirely.  Returns (result dict, snapshotter) — the
-    snapshotter records which stages resumed vs computed.
+    """:func:`resolve_entities` resumable from Iceberg-shaped snapshot
+    checkpoints (BASELINE.json north_rule): every ER cut commits
+    ATOMICALLY to an IceLite table under ``workdir`` with per-data-file
+    row counts in the manifest (the per-partition lineage), and the
+    ``er_match_metrics`` table commits alongside.  Kill the job between
+    any two commits and a re-run resumes from the last committed
+    snapshot.  Returns (result dict, snapshotter) — the snapshotter
+    records which stages resumed vs computed.
 
     Reference resume story for contrast: manual re-runs of failed
     Condor chunks (create_metasra/Snakefile:481-486)."""
-    import os as _os
-
-    from ..icelite import IceLiteTable
-    from ..ops import IceLiteSnapshotter
-
     snap = IceLiteSnapshotter(spark, workdir)
-    profiles = snap.cut(doc_profiles(documents), "er_profiles")
-    reps = snap.cut(representative_profiles(profiles), "er_reps")
-
-    # blocking parameters are part of er_scored's identity: a workdir
-    # committed under different blocking semantics (e.g. pre-rare-key-
-    # bypass) must NOT resume into a run with new parameters, or the
-    # pipeline silently mixes candidate-formation semantics (ADVICE
-    # r05).  The params are recorded in the snapshot summary and the
-    # resume is invalidated on mismatch.
-    blocking_params = {"blocking-min-shared": str(MIN_SHARED),
-                       "blocking-rare-df": str(RARE_DF),
-                       "blocking-max-block": str(max_block),
-                       "blocking-ngram": str(ngram)}
-    # lazy either way: only the compute branch below runs ``keys``;
-    # ``hot`` is returned for the caller's metrics table
-    keys, hot = blocking_keys(reps, ngram=ngram, max_block=max_block)
-    scored_path = _os.path.join(workdir, "er_scored")
-    resumed_scored = None
-    if IceLiteTable.exists(scored_path):
-        t_scored = IceLiteTable.load(scored_path)
-        snap_meta = t_scored.snapshot_for_stage("er_scored")
-        if snap_meta is not None:
-            recorded = {k: str(v) for k, v in
-                        (snap_meta.get("summary") or {}).items()
-                        if k.startswith("blocking-")}
-            if recorded == blocking_params:
-                # resume: skip blocking, IDF collect, scoring kernel
-                resumed_scored = t_scored.read(spark)
-    if resumed_scored is not None:
-        scored = resumed_scored
-        snap.stages_resumed.append("er_scored")
-    else:
-        idf, default_idf = token_idf(profiles)
-        pairs = candidate_pairs(keys, min_shared=MIN_SHARED,
-                                rare_df=RARE_DF)
-        t_scored = (IceLiteTable.load(scored_path)
-                    if IceLiteTable.exists(scored_path)
-                    else IceLiteTable.create(scored_path))
-        t_scored.commit(
-            score_pairs(pairs, reps, idf=idf, default_idf=default_idf,
-                        reject_below=threshold),
-            operation="overwrite", stage="er_scored",
-            summary=blocking_params)
-        scored = t_scored.read(spark)
-        snap.stages_computed.append("er_scored")
-
-    # the resume check must precede connected_components: CC runs its
-    # driver-synchronized rounds EAGERLY at construction, so building
-    # the labels frame only to throw it away would redo the clustering
-    labels_path = _os.path.join(workdir, "er_labels")
-    if (IceLiteTable.exists(labels_path)
-            and IceLiteTable.load(labels_path).snapshot_for_stage(
-                "er_labels") is not None):
-        labels = IceLiteTable.load(labels_path).read(spark)
-        snap.stages_resumed.append("er_labels")
-        _, star = _doc_rep_star(profiles, reps)
-    else:
-        # CC keeps its per-round lineage cuts (localCheckpoint) —
-        # durable resume granularity is the er_labels commit itself
-        star, labels = _star_and_labels(profiles, reps, scored, threshold,
-                                        checkpoint=True)
-        labels = snap.cut(labels, "er_labels")
-    clusters = assign_clusters(documents, labels)
-
-    mpath = _os.path.join(workdir, "er_match_metrics")
-    t = (IceLiteTable.load(mpath) if IceLiteTable.exists(mpath)
-         else IceLiteTable.create(mpath))
-    if not t.snapshots():
-        metrics = (scored
-                   .select(F.count("*").alias("candidate_pairs"),
-                           F.sum(((F.col("score") >= threshold)
-                                  & ~F.col("rejected")).cast("long"))
-                           .alias("accepted_pairs"),
-                           F.sum(F.col("rejected").cast("long"))
-                           .alias("rejected_pairs"))
-                   .crossJoin(star.select(F.count("*").alias("star_edges"))))
-        t.commit(metrics, stage="er_match_metrics")
-    result = {"profiles": profiles, "pairs": scored.unionByName(star),
-              "clusters": clusters, "hot_keys": hot,
-              "match_metrics": t.read(spark)}
-    return result, snap
+    res = resolve_entities(spark, documents, threshold=threshold,
+                           ngram=ngram, max_block=max_block, snap=snap)
+    res["match_metrics"] = snap.cut(
+        res["match_metrics"], "er_match_metrics",
+        _identity(threshold, ngram, max_block, "softtfidf"))
+    return res, snap
 
 
 def pairwise_f1(scored_pairs: DataFrame, truth: DataFrame,

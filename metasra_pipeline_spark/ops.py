@@ -7,8 +7,12 @@ runtime jar, so the one durable snapshotter is
 :class:`IceLiteSnapshotter`: an Iceberg-shaped commit log
 (:mod:`metasra_pipeline_spark.icelite`) with atomic snapshot commits and
 per-data-file row counts.  :class:`IcebergSnapshotter` honors the same
-``Snapshotter.cut`` contract against a real catalog, so swapping one for
-the other is a config change, not a code change.
+``Snapshotter.cut`` / ``committed`` contract against a real catalog, so
+swapping one for the other is a config change, not a code change.
+
+``run_mapping_pipeline`` and ``er.resolution.resolve_entities`` take
+that choice as their one ``snap=`` argument (default
+:class:`LocalSnapshotter`, in-memory cuts).
 """
 
 from __future__ import annotations
@@ -43,25 +47,47 @@ def write_table(df: DataFrame, target: str, mode: str = "overwrite") -> None:
 
 
 # ------------------------------------------------------- snapshotters
+#: snapshot-summary key prefix under which a durable cut records its
+#: identity (IceLite summary entries / Iceberg snapshot properties)
+_IDENTITY = "identity."
+
+
+def _identity_summary(identity: dict | None) -> dict[str, str]:
+    return {_IDENTITY + k: str(v) for k, v in (identity or {}).items()}
+
+
+def _same_identity(summary: dict | None, identity: dict | None) -> bool:
+    recorded = {k: str(v) for k, v in (summary or {}).items()
+                if k.startswith(_IDENTITY)}
+    return recorded == _identity_summary(identity)
+
+
 class Snapshotter:
-    """Stage-boundary materialization policy for the mapping pipeline.
+    """Stage-boundary materialization policy for the mapping pipeline
+    and the ER pipeline.
 
     Every named ``cut`` is both a lineage cut (the plan downstream reads
     a materialized frame, not a re-derived subtree) and the resume
-    granularity: ``IceLiteSnapshotter`` commits each cut as a snapshot
+    granularity: a durable snapshotter commits each cut as a snapshot
     and a re-run *reads the committed snapshot instead of recomputing*
     (the reference's resume story is manual re-runs of failed Condor
-    chunks, create_metasra/Snakefile:481-486)."""
+    chunks, create_metasra/Snakefile:481-486).
 
-    def cut(self, df: DataFrame, name: str) -> DataFrame:
+    ``identity`` names the parameters a stage's rows depend on beyond
+    its input frame.  A durable cut records it with the commit and
+    resumes only a commit whose recorded identity equals it, so a
+    re-run with different parameters recomputes instead of resuming
+    stale rows.  ``committed`` is that lookup on its own, for a caller
+    that must skip building an expensive input when the stage is
+    already committed; an in-memory snapshotter has nothing committed."""
+
+    def cut(self, df: DataFrame, name: str,
+            identity: dict | None = None) -> DataFrame:
         raise NotImplementedError
 
-
-class NoSnapshotter(Snapshotter):
-    """No materialization — fully lazy plan (unit tests, tiny inputs)."""
-
-    def cut(self, df: DataFrame, name: str) -> DataFrame:
-        return df
+    def committed(self, name: str,
+                  identity: dict | None = None) -> DataFrame | None:
+        return None
 
 
 class LocalSnapshotter(Snapshotter):
@@ -70,7 +96,8 @@ class LocalSnapshotter(Snapshotter):
     Every cut is load-bearing (OPTIMIZATION_r06 retested each one);
     per-cut wall / jobs / rows come from ``perfbench --trace 1``."""
 
-    def cut(self, df: DataFrame, name: str) -> DataFrame:
+    def cut(self, df: DataFrame, name: str,
+            identity: dict | None = None) -> DataFrame:
         return df.localCheckpoint(eager=True)
 
 
@@ -83,7 +110,7 @@ class IceLiteSnapshotter(Snapshotter):
     stage's manifest records per-data-file row counts —
     the per-partition lineage of the north rule — and ``cut`` accepts
     no recompute on resume: a committed stage is read back from its
-    snapshot."""
+    snapshot.  The identity rides in the snapshot summary."""
 
     def __init__(self, spark: SparkSession, workdir: str):
         from .icelite import IceLiteTable
@@ -93,16 +120,28 @@ class IceLiteSnapshotter(Snapshotter):
         self.stages_resumed: list[str] = []
         self.stages_computed: list[str] = []
 
-    def cut(self, df: DataFrame, name: str) -> DataFrame:
+    def committed(self, name: str,
+                  identity: dict | None = None) -> DataFrame | None:
         path = os.path.join(self.workdir, name)
-        if self._Table.exists(path):
-            t = self._Table.load(path)
-            if t.snapshot_for_stage(name) is not None:
-                self.stages_resumed.append(name)
-                return t.read(self.spark)
-        else:
-            t = self._Table.create(path)
-        t.commit(df, operation="overwrite", stage=name)
+        if not self._Table.exists(path):
+            return None
+        t = self._Table.load(path)
+        s = t.snapshot_for_stage(name)
+        if s is None or not _same_identity(s.get("summary"), identity):
+            return None
+        self.stages_resumed.append(name)
+        return t.read(self.spark)
+
+    def cut(self, df: DataFrame, name: str,
+            identity: dict | None = None) -> DataFrame:
+        done = self.committed(name, identity)
+        if done is not None:
+            return done
+        path = os.path.join(self.workdir, name)
+        t = (self._Table.load(path) if self._Table.exists(path)
+             else self._Table.create(path))
+        t.commit(df, operation="overwrite", stage=name,
+                 summary=_identity_summary(identity))
         self.stages_computed.append(name)
         return t.read(self.spark)
 
@@ -115,17 +154,19 @@ class IcebergSnapshotter(Snapshotter):
     Each cut is one atomic ``writeTo(ident).createOrReplace()`` (an
     Iceberg snapshot commit: metadata + manifest + catalog pointer
     swap — the exact properties IceLite re-implements); resume reads
-    the committed table instead of recomputing.  Table identifiers are
-    ``<catalog>.<namespace>.<stage>``, so swapping
-    :class:`IceLiteSnapshotter` → :class:`IcebergSnapshotter` is a
-    CONFIG-ONLY change for any pipeline written against the
-    :class:`Snapshotter` seam (resolve_entities_checkpointed,
-    run_icelite_pipeline).  Conformance is pinned by
+    the committed table instead of recomputing.  The identity is
+    written as snapshot properties (``snapshot-property.*`` write
+    options) and compared against the current snapshot's summary on
+    resume.  Table identifiers are ``<catalog>.<namespace>.<stage>``,
+    so swapping :class:`IceLiteSnapshotter` → :class:`IcebergSnapshotter`
+    is a CONFIG-ONLY change for any pipeline written against the
+    :class:`Snapshotter` seam (``run_mapping_pipeline(snap=...)``,
+    ``resolve_entities(snap=...)``).  Conformance is pinned by
     tests/test_snapshotter_contract.py, which runs the same
-    compute/resume/overwrite scenarios against every implementation and
-    skips this one only when no Iceberg catalog is configured
-    (``iceberg_available``) — enable it with the standard runtime jar +
-    catalog conf:
+    compute/resume/overwrite/identity scenarios against every
+    implementation and skips this one only when no Iceberg catalog is
+    configured (``iceberg_available``) — enable it with the standard
+    runtime jar + catalog conf:
 
         spark.jars.packages=org.apache.iceberg:iceberg-spark-runtime-...
         spark.sql.catalog.local=org.apache.iceberg.spark.SparkCatalog
@@ -146,12 +187,28 @@ class IcebergSnapshotter(Snapshotter):
     def _ident(self, name: str) -> str:
         return f"{self.catalog}.{self.namespace}.{name}"
 
-    def cut(self, df: DataFrame, name: str) -> DataFrame:
+    def committed(self, name: str,
+                  identity: dict | None = None) -> DataFrame | None:
         ident = self._ident(name)
-        if self.spark.catalog.tableExists(ident):
-            self.stages_resumed.append(name)
-            return self.spark.table(ident)
-        df.writeTo(ident).createOrReplace()
+        if not self.spark.catalog.tableExists(ident):
+            return None
+        last = self.spark.sql(f"SELECT summary FROM {ident}.snapshots "
+                              f"ORDER BY committed_at DESC LIMIT 1").first()
+        if not _same_identity(last and last["summary"], identity):
+            return None
+        self.stages_resumed.append(name)
+        return self.spark.table(ident)
+
+    def cut(self, df: DataFrame, name: str,
+            identity: dict | None = None) -> DataFrame:
+        done = self.committed(name, identity)
+        if done is not None:
+            return done
+        ident = self._ident(name)
+        writer = df.writeTo(ident)
+        for k, v in _identity_summary(identity).items():
+            writer = writer.option("snapshot-property." + k, v)
+        writer.createOrReplace()
         self.stages_computed.append(name)
         return self.spark.table(ident)
 
@@ -163,25 +220,17 @@ def run_icelite_pipeline(spark: SparkSession, documents: DataFrame,
     observability tables committed into the same catalog directory:
     ``match_metrics`` (match-count metrics over the final match stage)
     and the per-partition lineage already carried by every stage
-    manifest (``IceLiteTable.lineage``).  Kill-and-rerun resumes from
-    the last committed snapshot (tests/test_icelite.py)."""
-    from .icelite import IceLiteTable
+    manifest (each stage table's ``lineage()``).  Kill-and-rerun
+    resumes from the last committed snapshot (tests/test_icelite.py)."""
     from .plans.pipeline import run_mapping_pipeline
 
     snap = IceLiteSnapshotter(spark, workdir)
     res = run_mapping_pipeline(spark, documents, ref, snap=snap)
     mapped = snap.cut(res.mapped_terms, "mapped_terms")
-    # real_values is already a pipeline-internal cut — read its snapshot
-    rv = IceLiteTable.load(
-        os.path.join(workdir, "real_values")).read(spark)
-    mpath = os.path.join(workdir, "match_metrics")
-    t = (IceLiteTable.load(mpath) if IceLiteTable.exists(mpath)
-         else IceLiteTable.create(mpath))
-    if not t.snapshots():
-        m_final = IceLiteTable.load(
-            os.path.join(workdir, "m_final")).read(spark)
-        t.commit(match_metrics(m_final), stage="match_metrics")
-    return mapped, rv, snap
+    # real_values and matches are already the pipeline's real_values /
+    # m_final cuts, i.e. reads of their committed snapshots
+    snap.cut(match_metrics(res.matches), "match_metrics")
+    return mapped, res.real_values, snap
 
 
 # ------------------------------------------------------------- metrics

@@ -34,7 +34,7 @@ from ..operators import consolidate as C
 from ..operators import inference as I
 from ..operators import precedence as P
 from ..operators import stages as S
-from ..ops import LocalSnapshotter, NoSnapshotter, Snapshotter
+from ..ops import LocalSnapshotter, Snapshotter
 from ..refdata import RefData
 
 
@@ -73,12 +73,11 @@ def cell_line_term_ids(ref: RefData) -> DataFrame:
 
 
 def run_mapping_pipeline(spark: SparkSession, documents: DataFrame,
-                         ref: RefData, checkpoint: bool = True,
-                         with_ancestors: bool = False,
+                         ref: RefData, with_ancestors: bool = False,
                          exclude_real_value_properties: bool = True,
                          snap: Snapshotter | None = None) -> PipelineResult:
     if snap is None:
-        snap = LocalSnapshotter() if checkpoint else NoSnapshotter()
+        snap = LocalSnapshotter()
     # Partition ONCE by doc_id.  Every downstream per-doc window /
     # groupBy / self-join keys on (doc_id, …) — HashPartitioning(doc_id)
     # satisfies ClusteredDistribution of any superset key, so Catalyst
@@ -253,7 +252,6 @@ def run_mapping_pipeline(spark: SparkSession, documents: DataFrame,
 
 def run_chunked_pipeline(spark: SparkSession, documents: DataFrame,
                          ref: RefData, n_chunks: int | None = None,
-                         checkpoint: bool = True,
                          with_ancestors: bool = False,
                          snap_factory=None) -> PipelineResult:
     """The mapping pipeline as a pool of concurrent per-chunk jobs.
@@ -285,7 +283,6 @@ def run_chunked_pipeline(spark: SparkSession, documents: DataFrame,
     if n_chunks <= 1:
         snap = snap_factory(0) if snap_factory else None
         return run_mapping_pipeline(spark, documents, ref,
-                                    checkpoint=checkpoint,
                                     with_ancestors=with_ancestors,
                                     snap=snap)
 
@@ -295,8 +292,7 @@ def run_chunked_pipeline(spark: SparkSession, documents: DataFrame,
 
     def _work(i: int) -> None:
         chunk = tagged.where(F.col("_chunk") == i).drop("_chunk")
-        snap = snap_factory(i) if snap_factory else (
-            LocalSnapshotter() if checkpoint else NoSnapshotter())
+        snap = snap_factory(i) if snap_factory else None
         results[i] = run_mapping_pipeline(spark, chunk, ref,
                                           with_ancestors=with_ancestors,
                                           snap=snap)

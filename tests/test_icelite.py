@@ -185,25 +185,37 @@ def test_icelite_pipeline_kill_and_rerun_resume(spark, refdata, tmp_path):
 
 def test_er_scored_resume_invalidated_on_blocking_param_change(
         spark, tmp_path):
-    """A committed er_scored snapshot records its blocking parameters;
-    a re-run with DIFFERENT parameters must recompute instead of
-    resuming (mixed-semantics resume guard, ADVICE r05)."""
+    """A committed er_scored snapshot records its blocking and scoring
+    parameters; a re-run with DIFFERENT parameters must recompute
+    er_scored AND er_labels instead of resuming (mixed-semantics resume
+    guard, ADVICE r05)."""
     from metasra_pipeline_spark.datagen import synth_documents
     from metasra_pipeline_spark.er.resolution import (
+        resolve_entities,
         resolve_entities_checkpointed,
     )
 
     docs = (synth_documents(spark, 60, seed=21)
             .select("doc_id", "spans").localCheckpoint())
     wd = str(tmp_path / "er_params")
+    def both_computed(snap):
+        # er_labels is derived from er_scored: it must never resume
+        # across a recomputed er_scored
+        return ({"er_scored", "er_labels"} <= set(snap.stages_computed)
+                and not {"er_scored", "er_labels"}
+                & set(snap.stages_resumed))
+
     _res1, snap1 = resolve_entities_checkpointed(spark, docs, wd,
                                                  threshold=0.65)
     assert "er_scored" in snap1.stages_computed
+    assert both_computed(snap1)
 
     # same params: resumes
     _res2, snap2 = resolve_entities_checkpointed(spark, docs, wd,
                                                  threshold=0.65)
     assert "er_scored" in snap2.stages_resumed
+    assert {"er_scored", "er_labels"} <= set(snap2.stages_resumed)
+    assert snap2.stages_computed == []
 
     # different max_block: the committed snapshot's blocking params no
     # longer match -> er_scored must be recomputed, not resumed
@@ -212,3 +224,42 @@ def test_er_scored_resume_invalidated_on_blocking_param_change(
                                                  max_block=50)
     assert "er_scored" in snap3.stages_computed
     assert "er_scored" not in snap3.stages_resumed
+    assert both_computed(snap3)
+
+    # different threshold only: er_scored's rejected flags were computed
+    # against the old cut, so it must be recomputed too
+    res4, snap4 = resolve_entities_checkpointed(spark, docs, wd,
+                                                threshold=0.6,
+                                                max_block=50)
+    assert both_computed(snap4)
+    fresh = resolve_entities(spark, docs, threshold=0.6, max_block=50)
+    assert (sorted(tuple(r) for r in res4["clusters"].collect())
+            == sorted(tuple(r) for r in fresh["clusters"].collect()))
+    assert res4["match_metrics"].first() == fresh["match_metrics"].first()
+
+
+def test_er_checkpointed_equals_in_memory(spark, tmp_path):
+    """The IceLite-committed run and the default in-memory run are the
+    same body over different snapshotters: identical clusters, an
+    identical pairs multiset and identical match metrics."""
+    from collections import Counter
+
+    from metasra_pipeline_spark.datagen import synth_documents
+    from metasra_pipeline_spark.er.resolution import (
+        resolve_entities,
+        resolve_entities_checkpointed,
+    )
+
+    docs = (synth_documents(spark, 120, seed=11)
+            .select("doc_id", "spans").localCheckpoint())
+    mem = resolve_entities(spark, docs, threshold=0.65)
+    dur, _snap = resolve_entities_checkpointed(
+        spark, docs, str(tmp_path / "er"), threshold=0.65)
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    assert rows(dur["clusters"]) == rows(mem["clusters"])
+    assert rows(dur["pairs"]) == rows(mem["pairs"])
+    assert sum(rows(mem["pairs"]).values()) > 0
+    assert dur["match_metrics"].first() == mem["match_metrics"].first()

@@ -28,7 +28,7 @@ def result(spark, refdata):
         # cell-line term under a non-cell-line key must be blocked (P4)
         ("g5", [("treatment", "HeLa conditioned medium")]),
     ])
-    res = run_mapping_pipeline(spark, docs, refdata, checkpoint=True)
+    res = run_mapping_pipeline(spark, docs, refdata)
     # collect once — every .collect() would re-run the consolidation tail
     mapped = res.mapped_terms.collect()
     rvs = res.real_values.collect()

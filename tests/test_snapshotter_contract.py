@@ -1,6 +1,7 @@
 """Snapshotter-seam conformance: every implementation must honor the
-same compute / resume / no-recompute contract, so swapping the sandbox
-IceLite commit log for a real Apache Iceberg catalog is config-only.
+same compute / resume / no-recompute / identity contract, so swapping
+the sandbox IceLite commit log for a real Apache Iceberg catalog is
+config-only.
 
 The real-Iceberg case auto-skips when no catalog is configured (no
 iceberg runtime jar ships in this sandbox); enable it with the jar +
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from metasra_pipeline_spark.ops import (
     IcebergSnapshotter,
     IceLiteSnapshotter,
+    LocalSnapshotter,
     iceberg_available,
 )
 
@@ -80,3 +82,44 @@ def test_committed_cut_is_a_lineage_cut(spark, tmp_path, kind):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Range" not in plan  # a recomputed plan would inline range(4)
     assert out.count() == out.count() == 4
+
+
+@pytest.mark.parametrize("kind", ["icelite", "iceberg"])
+def test_identity_gates_resume(spark, tmp_path, kind):
+    """Scenario 4: a cut committed under one identity resumes only for
+    the same identity; a different identity recomputes, and the new
+    commit records the new identity (it then resumes under the new
+    identity, not the old one)."""
+    def frame(v):
+        return spark.range(3).select("id", F.lit(v).alias("v"))
+
+    def values(df):
+        return {r["v"] for r in df.collect()}
+
+    snap = _make(kind, spark, tmp_path, "r1")
+    snap.cut(frame(1), "stage_a", {"threshold": 0.65, "ngram": 4})
+
+    snap2 = _make(kind, spark, tmp_path, "r2")
+    got = snap2.cut(frame(2), "stage_a", {"threshold": 0.65, "ngram": 4})
+    assert values(got) == {1}
+    assert snap2.stages_resumed == ["stage_a"]
+    assert snap2.stages_computed == []
+
+    snap3 = _make(kind, spark, tmp_path, "r3")
+    assert snap3.committed("stage_a", {"threshold": 0.5, "ngram": 4}) is None
+    assert snap3.committed("stage_a") is None
+    got3 = snap3.cut(frame(3), "stage_a", {"threshold": 0.5, "ngram": 4})
+    assert values(got3) == {3}
+    assert snap3.stages_computed == ["stage_a"]
+    assert snap3.stages_resumed == []
+
+    snap4 = _make(kind, spark, tmp_path, "r4")
+    assert snap4.committed("stage_a", {"threshold": 0.65, "ngram": 4}) is None
+    again = snap4.committed("stage_a", {"threshold": 0.5, "ngram": 4})
+    assert again is not None and values(again) == {3}
+    assert snap4.stages_resumed == ["stage_a"]
+
+
+def test_in_memory_snapshotter_has_nothing_committed():
+    assert LocalSnapshotter().committed("stage_a") is None
+    assert LocalSnapshotter().committed("stage_a", {"threshold": 1}) is None
