@@ -353,10 +353,11 @@ def incremental_resolve_checkpointed(spark: SparkSession, workdir: str,
                                      new_documents: DataFrame,
                                      threshold: float = 0.65,
                                      ngram: int = 4, max_block: int = 200,
-                                     **kw) -> dict[str, DataFrame]:
+                                     **kw) -> dict:
     """Land a delta batch against the IceLite workdir of a prior
-    :func:`..er.resolution.resolve_entities_checkpointed` run (or a
-    prior landing) and commit the outcome atomically:
+    :func:`..er.resolution.resolve_entities` run under an
+    :class:`..ops.IceLiteSnapshotter` (e.g. :func:`..job.run_job` with
+    ``er``), or of a prior landing, and commit the outcome atomically:
 
     - ``er_profiles`` gains an APPEND snapshot holding only the new
       docs' profile rows (the live file set = base files + delta
@@ -380,7 +381,8 @@ def incremental_resolve_checkpointed(spark: SparkSession, workdir: str,
     ``er_landing_metrics`` row recording the empty/partial retry —
     metrics are an audit log, one row per attempt is the honest
     record.  Returns the :func:`incremental_resolve` dict plus the
-    committed metrics frame under ``landing_metrics``."""
+    committed metrics frame under ``landing_metrics`` and the new
+    ``er_labels`` snapshot id under ``labels_snapshot_id``."""
     import os as _os
 
     from ..icelite import IceLiteTable
@@ -414,9 +416,9 @@ def incremental_resolve_checkpointed(spark: SparkSession, workdir: str,
     # labels BEFORE profiles: see idempotency note in the docstring —
     # the reverse order would turn a crash between the commits into
     # unlabeled docs that the guard above then skips forever
-    labels_t.commit(res["clusters"], operation="overwrite",
-                    stage="er_labels",
-                    summary={"landing-merges": n_merges})
+    res["labels_snapshot_id"] = labels_t.commit(
+        res["clusters"], operation="overwrite", stage="er_labels",
+        summary={"landing-merges": n_merges})
     profiles_t.commit(res["new_profiles"], operation="append",
                       stage="er_profiles",
                       summary={"landing-new-docs": n_new})

@@ -24,8 +24,8 @@ Its stage boundaries (``er_profiles``, ``er_reps``, ``er_scored``,
 it is handed — in-memory by default, durable and resumable under
 IceLite or real Iceberg — exactly as ``run_mapping_pipeline(snap=...)``
 does for the mapping pipeline.  :func:`resolve_entities_native` (the
-SQL-oracled scorer) and :func:`resolve_entities_checkpointed` (the
-IceLite-committed run) are thin wrappers of it.
+SQL-oracled scorer) is a thin wrapper of it; ``job.run_job`` runs it
+over the job's snapshotter and commits its outputs.
 
 The reference has no cross-doc clustering (its Condor jobs are
 shared-nothing, create_condorized_pipeline.py:81-119); BASELINE.json
@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..ops import IceLiteSnapshotter, LocalSnapshotter, Snapshotter
+from ..ops import LocalSnapshotter, Snapshotter
 from ..refdata import local_frame
 
 
@@ -700,8 +700,8 @@ def _doc_rep_star(profiles: DataFrame,
 
 def _identity(threshold: float, ngram: int, max_block: int,
               scorer: str) -> dict:
-    """What er_scored, er_labels and er_match_metrics depend on beyond
-    their input frames: a durable snapshot resumes only under the same
+    """What er_scored, er_labels and the job's ER outputs depend on
+    beyond their input frames: a durable snapshot resumes only under the same
     blocking and scoring parameters."""
     return {"blocking-min-shared": MIN_SHARED, "blocking-rare-df": RARE_DF,
             "blocking-max-block": max_block, "blocking-ngram": ngram,
@@ -811,29 +811,6 @@ def resolve_entities_native(spark: SparkSession, documents: DataFrame,
     """
     return resolve_entities(spark, documents, threshold=threshold,
                             ngram=0, max_block=max_block, _scorer="native")
-
-
-def resolve_entities_checkpointed(spark: SparkSession, documents: DataFrame,
-                                  workdir: str, threshold: float = 0.65,
-                                  ngram: int = 4, max_block: int = 200):
-    """:func:`resolve_entities` resumable from Iceberg-shaped snapshot
-    checkpoints (BASELINE.json north_rule): every ER cut commits
-    ATOMICALLY to an IceLite table under ``workdir`` with per-data-file
-    row counts in the manifest (the per-partition lineage), and the
-    ``er_match_metrics`` table commits alongside.  Kill the job between
-    any two commits and a re-run resumes from the last committed
-    snapshot.  Returns (result dict, snapshotter) — the snapshotter
-    records which stages resumed vs computed.
-
-    Reference resume story for contrast: manual re-runs of failed
-    Condor chunks (create_metasra/Snakefile:481-486)."""
-    snap = IceLiteSnapshotter(spark, workdir)
-    res = resolve_entities(spark, documents, threshold=threshold,
-                           ngram=ngram, max_block=max_block, snap=snap)
-    res["match_metrics"] = snap.cut(
-        res["match_metrics"], "er_match_metrics",
-        _identity(threshold, ngram, max_block, "softtfidf"))
-    return res, snap
 
 
 def pairwise_f1(scored_pairs: DataFrame, truth: DataFrame,

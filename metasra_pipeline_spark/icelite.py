@@ -28,10 +28,10 @@ public Apache Iceberg spec (https://iceberg.apache.org/spec/):
 Record counts come from parquet footers via pyarrow (driver-side, no
 Spark job) — the same statistics a real Iceberg writer collects.
 
-On a cluster with an Iceberg catalog, ``ops.write_table`` routes to
-the real thing; IceLite is the sandbox-faithful fallback whose commit,
-resume and lineage semantics are *testable here* (tests/test_icelite.py)
-instead of asserted in prose.  Reference resume story for contrast:
+On a cluster with an Iceberg catalog, ``ops.IcebergSnapshotter``
+commits the same cuts to the real thing; IceLite is the sandbox-faithful
+fallback whose commit, resume and lineage semantics are *testable here*
+(tests/test_icelite.py) instead of asserted in prose.  Reference resume story for contrast:
 manual re-runs of failed Condor chunks (create_metasra/Snakefile:481-486,
 condor_run_pipeline.py:87-89) — no atomicity, no lineage, no time travel.
 """

@@ -1,5 +1,5 @@
-"""Ops layer: storage shim, snapshot checkpoint / resume, per-partition
-lineage + metrics (BASELINE.json north_rule requirements).
+"""Ops layer: snapshot checkpoint / resume and match-count metrics
+(BASELINE.json north_rule requirements).
 
 The production design writes every stage boundary as an Iceberg snapshot
 (resume = read the last committed snapshot).  The sandbox has no Iceberg
@@ -12,14 +12,15 @@ swapping one for the other is a config change, not a code change.
 
 ``run_mapping_pipeline`` and ``er.resolution.resolve_entities`` take
 that choice as their one ``snap=`` argument (default
-:class:`LocalSnapshotter`, in-memory cuts).
+:class:`LocalSnapshotter`, in-memory cuts); ``job.run_job`` runs both
+and commits every output table over the same snapshotter.  The
+per-partition lineage is each durable table's manifest
+(``IceLiteTable.lineage()``; Iceberg's ``files`` metadata table).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,19 +32,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return bool(spark.conf.get("spark.sql.catalog.local", None))
     except Exception:
         return False
-
-
-def write_table(df: DataFrame, target: str, mode: str = "overwrite") -> None:
-    """Iceberg table name (``catalog.db.tbl``) or parquet path."""
-    spark = df.sparkSession
-    if "/" not in target and iceberg_available(spark):
-        writer = df.writeTo(target)
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-    else:
-        df.write.mode(mode).parquet(target)
 
 
 # ------------------------------------------------------- snapshotters
@@ -213,47 +201,9 @@ class IcebergSnapshotter(Snapshotter):
         return self.spark.table(ident)
 
 
-def run_icelite_pipeline(spark: SparkSession, documents: DataFrame,
-                         ref, workdir: str):
-    """The mapping pipeline with every stage boundary committed as an
-    IceLite (Iceberg-semantics) snapshot, plus the north rule's two
-    observability tables committed into the same catalog directory:
-    ``match_metrics`` (match-count metrics over the final match stage)
-    and the per-partition lineage already carried by every stage
-    manifest (each stage table's ``lineage()``).  Kill-and-rerun
-    resumes from the last committed snapshot (tests/test_icelite.py)."""
-    from .plans.pipeline import run_mapping_pipeline
-
-    snap = IceLiteSnapshotter(spark, workdir)
-    res = run_mapping_pipeline(spark, documents, ref, snap=snap)
-    mapped = snap.cut(res.mapped_terms, "mapped_terms")
-    # real_values and matches are already the pipeline's real_values /
-    # m_final cuts, i.e. reads of their committed snapshots
-    snap.cut(match_metrics(res.matches), "match_metrics")
-    return mapped, res.real_values, snap
-
-
 # ------------------------------------------------------------- metrics
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """(stage, partition_id, n_rows) — per-partition lineage/row counts,
-    computed with spark_partition_id (no extra shuffle)."""
-    return (df.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid").agg(F.count("*").alias("n_rows"))
-            .select(F.lit(stage).alias("stage"),
-                    F.col("_pid").alias("partition_id"), "n_rows"))
-
-
 def match_metrics(matches: DataFrame) -> DataFrame:
     """(match_target, edit_dist, n) — match-count metrics table."""
     return (matches.groupBy("match_target", "edit_dist")
             .agg(F.count("*").alias("n")))
 
-
-def write_run_manifest(workdir: str, payload: dict) -> str:
-    os.makedirs(workdir, exist_ok=True)
-    path = os.path.join(workdir, "_MANIFEST.json")
-    payload = dict(payload)
-    payload["ts"] = time.time()
-    with open(path, "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-    return path

@@ -8,8 +8,9 @@ and queried by term on the website (website/query_metasra.py:3-56).
 Re-expressed Spark-first: gather = union over job outputs, the tables
 are projections of mapped_terms / real_values / sample-type predictions,
 JSON is one to_json per sample, and the website query is a filtered
-join — all writable through ops.write_table (parquet/Iceberg) or the
-SQLite sink for the reference's exact artifact shape.
+join — all committable as ``Snapshotter`` cuts (IceLite/Iceberg, as
+``job.run_job`` commits its outputs) or through the SQLite sink for the
+reference's exact artifact shape.
 """
 
 from __future__ import annotations
@@ -98,7 +99,8 @@ def metasra_json(mapped_terms: DataFrame, real_values: DataFrame,
 
 def write_metasra_sqlite(tables: dict[str, DataFrame], path: str) -> None:
     """The reference's exact SQLite artifact (3 tables; small-output
-    driver-side sink — production writes Iceberg via ops.write_table)."""
+    driver-side sink — production commits Iceberg snapshots through
+    ``ops.IcebergSnapshotter``)."""
     from .sources.sqlite_src import write_sqlite
     for name, df in tables.items():
         write_sqlite(df, path, name)

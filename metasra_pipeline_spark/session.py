@@ -70,6 +70,24 @@ def get_spark(
     return spark
 
 
+def build_package_zip(out: str) -> str:
+    """Zip this package's sources (``__pycache__`` and ``.pyc`` left
+    out) to ``out`` under ``metasra_pipeline_spark/`` arcnames — the
+    ``--py-files`` archive, built by ``scripts/make_dist.py`` and by
+    :func:`_ship_package`."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    with zipfile.ZipFile(out, "w") as zf:
+        for root, dirs, files in os.walk(pkg_dir):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for fn in files:
+                if fn.endswith(".pyc"):
+                    continue
+                full = os.path.join(root, fn)
+                zf.write(full, os.path.join("metasra_pipeline_spark",
+                                            os.path.relpath(full, pkg_dir)))
+    return out
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors (the local-mode equivalent of
     ``spark-submit --py-files dist/metasra_pipeline_spark.zip``).
@@ -79,18 +97,9 @@ def _ship_package(spark: SparkSession) -> None:
     """
     if getattr(spark, "_metasra_pkg_shipped", False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(tempfile.gettempdir(),
                          f"metasra_pipeline_spark_{os.getpid()}.zip")
     if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith((".pyc",)):
-                        continue
-                    full = os.path.join(root, fn)
-                    rel = os.path.join("metasra_pipeline_spark",
-                                       os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
+        build_package_zip(zpath)
     spark.sparkContext.addPyFile(zpath)
     spark._metasra_pkg_shipped = True

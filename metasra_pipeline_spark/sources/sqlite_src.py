@@ -32,7 +32,7 @@ def read_sample_attributes(spark: SparkSession, path: str) -> DataFrame:
 def write_sqlite(df: DataFrame, path: str, table: str,
                  if_exists: str = "replace") -> None:
     """Final-DB sink (small outputs only — driver-side collect; the
-    production sink is Iceberg via ops.write_table)."""
+    production sink is Iceberg through ``ops.IcebergSnapshotter``)."""
     import pandas as pd  # noqa: F401
     pdf = df.toPandas()
     with sqlite3.connect(path) as conn:

@@ -49,7 +49,8 @@ def steal():
 from pyspark.sql import functions as F
 from metasra_pipeline_spark.session import get_spark
 from metasra_pipeline_spark.datagen import synth_documents
-from metasra_pipeline_spark.er.resolution import resolve_entities_checkpointed
+from metasra_pipeline_spark.er.resolution import resolve_entities
+from metasra_pipeline_spark.ops import IceLiteSnapshotter
 from metasra_pipeline_spark.er.incremental import incremental_resolve_checkpointed
 
 spark = get_spark("er_landing_bench", cores={cpus}, shuffle_partitions=64)
@@ -66,7 +67,7 @@ wd = tempfile.mkdtemp(prefix="er_landing_")
 try:
     base = docs.where(F.col("doc_id").isin(ids[:base_n])).localCheckpoint()
     t0, s0 = time.time(), steal()
-    resolve_entities_checkpointed(spark, base, wd)
+    resolve_entities(spark, base, snap=IceLiteSnapshotter(spark, wd))
     print("BASE", round(time.time() - t0, 1), round((steal() - s0) / 100, 1),
           flush=True)
     for k in range(n_land):

@@ -1,26 +1,23 @@
-"""Build dist/metasra_pipeline_spark.zip for spark-submit --py-files."""
+"""Build dist/metasra_pipeline_spark.zip for spark-submit --py-files.
+
+    python scripts/make_dist.py
+"""
 
 from __future__ import annotations
 
 import os
-import zipfile
+import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
+
+from metasra_pipeline_spark.session import build_package_zip  # noqa: E402
 
 
 def main() -> str:
     os.makedirs(os.path.join(HERE, "dist"), exist_ok=True)
-    out = os.path.join(HERE, "dist", "metasra_pipeline_spark.zip")
-    pkg = os.path.join(HERE, "metasra_pipeline_spark")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if fn.endswith(".pyc"):
-                    continue
-                full = os.path.join(root, fn)
-                zf.write(full, os.path.relpath(full, HERE))
+    out = build_package_zip(
+        os.path.join(HERE, "dist", "metasra_pipeline_spark.zip"))
     print(out)
     return out
 

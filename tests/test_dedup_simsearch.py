@@ -381,3 +381,25 @@ def test_cosine_neardup_numpy_attach_double_vectors_and_unique_ids(spark):
     dup = emb.unionByName(emb.limit(1))
     with pytest.raises(ValueError, match="duplicate"):
         cosine_near_dup_pairs(dup, numpy_attach=True)
+
+
+def test_cosine_neardup_auto_gate_each_side_of_the_cap(spark, monkeypatch):
+    """The auto gate collects at most cap + 1 rows once: a cap equal to
+    the row count takes the numpy attach, one below it the JVM
+    attach-join, and both give the same pairs."""
+    from metasra_pipeline_spark.functions.dedup import cosine_near_dup_pairs
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    n = emb.count()
+
+    def run(cap):
+        monkeypatch.setenv("COSINE_NP_ATTACH_MAX_ROWS", str(cap))
+        df = cosine_near_dup_pairs(emb)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return ("MapInPandas" in plan,
+                {(r["id_a"], r["id_b"]): r["cosine"] for r in df.collect()})
+
+    np_side, at_cap = run(n)
+    jvm_side, below_cap = run(n - 1)
+    assert np_side and not jvm_side
+    assert at_cap == below_cap and len(at_cap) > 0

@@ -8,6 +8,13 @@ from pyspark.sql import functions as F
 from metasra_pipeline_spark.datagen import synth_documents
 from metasra_pipeline_spark.er.incremental import incremental_resolve
 from metasra_pipeline_spark.er.resolution import resolve_entities
+from metasra_pipeline_spark.ops import IceLiteSnapshotter
+
+
+def _resolve_into(spark, docs, wd):
+    """Batch-resolve ``docs`` with every ER stage committed under
+    ``wd``: the base a landing resolves against."""
+    return resolve_entities(spark, docs, snap=IceLiteSnapshotter(spark, wd))
 
 
 def _partition(rows):
@@ -156,9 +163,6 @@ def test_incremental_checkpointed_landing(spark, tmp_path):
     from metasra_pipeline_spark.er.incremental import (
         incremental_resolve_checkpointed,
     )
-    from metasra_pipeline_spark.er.resolution import (
-        resolve_entities_checkpointed,
-    )
     from metasra_pipeline_spark.icelite import IceLiteTable
 
     wd = str(tmp_path / "er")
@@ -167,7 +171,7 @@ def test_incremental_checkpointed_landing(spark, tmp_path):
         ("a2", "human liver tissue rna extraction alpha"),
         ("z1", "totally unrelated mouse kidney sample zinc"),
     ])
-    resolve_entities_checkpointed(spark, base, wd)
+    _resolve_into(spark, base, wd)
 
     import os
     labels_t = IceLiteTable.load(os.path.join(wd, "er_labels"))
@@ -207,13 +211,10 @@ def test_incremental_checkpointed_second_landing(spark, tmp_path):
     from metasra_pipeline_spark.er.incremental import (
         incremental_resolve_checkpointed,
     )
-    from metasra_pipeline_spark.er.resolution import (
-        resolve_entities_checkpointed,
-    )
     from metasra_pipeline_spark.icelite import IceLiteTable
 
     wd = str(tmp_path / "er")
-    resolve_entities_checkpointed(spark, _docs(spark, [
+    _resolve_into(spark, _docs(spark, [
         ("a1", "human liver tissue rna extraction alpha"),
     ]), wd)
     incremental_resolve_checkpointed(spark, wd, _docs(spark, [
@@ -256,13 +257,10 @@ def test_incremental_checkpointed_relanding_is_idempotent(spark, tmp_path):
     from metasra_pipeline_spark.er.incremental import (
         incremental_resolve_checkpointed,
     )
-    from metasra_pipeline_spark.er.resolution import (
-        resolve_entities_checkpointed,
-    )
     from metasra_pipeline_spark.icelite import IceLiteTable
 
     wd = str(tmp_path / "er")
-    resolve_entities_checkpointed(spark, _docs(spark, [
+    _resolve_into(spark, _docs(spark, [
         ("a1", "human liver tissue rna extraction alpha"),
     ]), wd)
     batch = [("n1", "human liver tissue rna extraction alpha")]
@@ -292,10 +290,6 @@ def test_three_successive_landings_match_batch(spark, tmp_path):
     from metasra_pipeline_spark.er.incremental import (
         incremental_resolve_checkpointed,
     )
-    from metasra_pipeline_spark.er.resolution import (
-        resolve_entities,
-        resolve_entities_checkpointed,
-    )
     from metasra_pipeline_spark.icelite import IceLiteTable
 
     gen = synth_documents(spark, 300, seed=42).localCheckpoint()
@@ -304,7 +298,7 @@ def test_three_successive_landings_match_batch(spark, tmp_path):
                 for q in range(4)]
 
     wd = str(tmp_path / "er")
-    resolve_entities_checkpointed(spark, quarters[0], wd)
+    _resolve_into(spark, quarters[0], wd)
     n_seen = quarters[0].count()
     for q in (1, 2, 3):
         res = incremental_resolve_checkpointed(spark, wd, quarters[q])

@@ -11,7 +11,26 @@ import pytest
 
 from metasra_pipeline_spark.datagen import docs_from_kv
 from metasra_pipeline_spark.icelite import CommitConflict, IceLiteTable
-from metasra_pipeline_spark.ops import IceLiteSnapshotter, run_icelite_pipeline
+from metasra_pipeline_spark.ops import IceLiteSnapshotter
+
+
+def _resolve(spark, docs, wd, **kw):
+    """``resolve_entities`` over an IceLite snapshotter on ``wd``:
+    (result dict, snapshotter)."""
+    from metasra_pipeline_spark.er.resolution import resolve_entities
+
+    snap = IceLiteSnapshotter(spark, wd)
+    return resolve_entities(spark, docs, snap=snap, **kw), snap
+
+
+def _run_job(spark, docs, refdata, wd):
+    """The end-to-end job over an IceLite snapshotter on ``wd``:
+    (mapped terms, real values, snapshotter)."""
+    from metasra_pipeline_spark.job import run_job
+
+    snap = IceLiteSnapshotter(spark, wd)
+    out = run_job(spark, docs, refdata, snap)
+    return out["mapped_terms"], out["real_values"], snap
 
 
 def _df(spark, n, start=0):
@@ -101,19 +120,17 @@ def test_er_checkpointed_resume_and_metrics(spark, tmp_path):
     from IceLite snapshots: with er_scored + er_labels committed, a
     re-run against a POISONED corpus reproduces the original clusters
     (committed snapshots read, blocking/scoring/CC skipped), F1 gate
-    unchanged, and the match-count metrics table is committed."""
+    unchanged, and the match-count metrics agree with the committed
+    er_scored manifest (the job commits them as er_match_metrics,
+    tests/test_job.py)."""
     from metasra_pipeline_spark.datagen import synth_documents
-    from metasra_pipeline_spark.er.resolution import (
-        pairwise_f1,
-        resolve_entities_checkpointed,
-    )
+    from metasra_pipeline_spark.er.resolution import pairwise_f1
 
     gen = synth_documents(spark, 120, seed=11).localCheckpoint()
     docs = gen.select("doc_id", "spans")
     truth = gen.select("doc_id", "entity_id")
     wd = str(tmp_path / "er")
-    res1, snap1 = resolve_entities_checkpointed(spark, docs, wd,
-                                                threshold=0.65)
+    res1, snap1 = _resolve(spark, docs, wd, threshold=0.65)
     clusters1 = {(r["doc_id"], r["cluster_id"])
                  for r in res1["clusters"].collect()}
     # measured identical to the plain resolve_entities path on this
@@ -130,8 +147,7 @@ def test_er_checkpointed_resume_and_metrics(spark, tmp_path):
 
     # poisoned re-run: every stage committed → everything resumes
     poisoned = synth_documents(spark, 30, seed=99).select("doc_id", "spans")
-    res2, snap2 = resolve_entities_checkpointed(spark, poisoned, wd,
-                                                threshold=0.65)
+    res2, snap2 = _resolve(spark, poisoned, wd, threshold=0.65)
     assert snap2.stages_computed == []
     assert {"er_profiles", "er_scored",
             "er_labels"} <= set(snap2.stages_resumed)
@@ -155,7 +171,7 @@ def test_icelite_pipeline_kill_and_rerun_resume(spark, refdata, tmp_path):
         ("r2", [("cell line", "MDA-MB-231"), ("passage", "3")]),
     ])
     wd = str(tmp_path / "wd")
-    mapped1, rv1, snap1 = run_icelite_pipeline(spark, docs, refdata, wd)
+    mapped1, rv1, snap1 = _run_job(spark, docs, refdata, wd)
     out1 = {(r["doc_id"], r["term_id"], r["consequent"])
             for r in mapped1.collect()}
     assert out1
@@ -170,14 +186,14 @@ def test_icelite_pipeline_kill_and_rerun_resume(spark, refdata, tmp_path):
     for name in set(os.listdir(wd)) - survivors:
         shutil.rmtree(os.path.join(wd, name))
     poisoned = docs_from_kv(spark, [("zz", [("tissue", "liver")])])
-    mapped2, rv2, snap2 = run_icelite_pipeline(spark, poisoned, refdata, wd)
+    mapped2, rv2, snap2 = _run_job(spark, poisoned, refdata, wd)
     assert {(r["doc_id"], r["term_id"], r["consequent"])
             for r in mapped2.collect()} == out1
     assert set(survivors) <= set(snap2.stages_resumed)
     assert "m_final" in snap2.stages_computed
 
     # fully-committed third run: everything resumes, nothing computed
-    mapped3, _, snap3 = run_icelite_pipeline(spark, poisoned, refdata, wd)
+    mapped3, _, snap3 = _run_job(spark, poisoned, refdata, wd)
     assert snap3.stages_computed == []
     assert {(r["doc_id"], r["term_id"], r["consequent"])
             for r in mapped3.collect()} == out1
@@ -190,10 +206,7 @@ def test_er_scored_resume_invalidated_on_blocking_param_change(
     er_scored AND er_labels instead of resuming (mixed-semantics resume
     guard, ADVICE r05)."""
     from metasra_pipeline_spark.datagen import synth_documents
-    from metasra_pipeline_spark.er.resolution import (
-        resolve_entities,
-        resolve_entities_checkpointed,
-    )
+    from metasra_pipeline_spark.er.resolution import resolve_entities
 
     docs = (synth_documents(spark, 60, seed=21)
             .select("doc_id", "spans").localCheckpoint())
@@ -205,32 +218,28 @@ def test_er_scored_resume_invalidated_on_blocking_param_change(
                 and not {"er_scored", "er_labels"}
                 & set(snap.stages_resumed))
 
-    _res1, snap1 = resolve_entities_checkpointed(spark, docs, wd,
-                                                 threshold=0.65)
+    _res1, snap1 = _resolve(spark, docs, wd, threshold=0.65)
     assert "er_scored" in snap1.stages_computed
     assert both_computed(snap1)
 
     # same params: resumes
-    _res2, snap2 = resolve_entities_checkpointed(spark, docs, wd,
-                                                 threshold=0.65)
+    _res2, snap2 = _resolve(spark, docs, wd, threshold=0.65)
     assert "er_scored" in snap2.stages_resumed
     assert {"er_scored", "er_labels"} <= set(snap2.stages_resumed)
     assert snap2.stages_computed == []
 
     # different max_block: the committed snapshot's blocking params no
     # longer match -> er_scored must be recomputed, not resumed
-    _res3, snap3 = resolve_entities_checkpointed(spark, docs, wd,
-                                                 threshold=0.65,
-                                                 max_block=50)
+    _res3, snap3 = _resolve(spark, docs, wd, threshold=0.65,
+                           max_block=50)
     assert "er_scored" in snap3.stages_computed
     assert "er_scored" not in snap3.stages_resumed
     assert both_computed(snap3)
 
     # different threshold only: er_scored's rejected flags were computed
     # against the old cut, so it must be recomputed too
-    res4, snap4 = resolve_entities_checkpointed(spark, docs, wd,
-                                                threshold=0.6,
-                                                max_block=50)
+    res4, snap4 = _resolve(spark, docs, wd, threshold=0.6,
+                          max_block=50)
     assert both_computed(snap4)
     fresh = resolve_entities(spark, docs, threshold=0.6, max_block=50)
     assert (sorted(tuple(r) for r in res4["clusters"].collect())
@@ -245,15 +254,12 @@ def test_er_checkpointed_equals_in_memory(spark, tmp_path):
     from collections import Counter
 
     from metasra_pipeline_spark.datagen import synth_documents
-    from metasra_pipeline_spark.er.resolution import (
-        resolve_entities,
-        resolve_entities_checkpointed,
-    )
+    from metasra_pipeline_spark.er.resolution import resolve_entities
 
     docs = (synth_documents(spark, 120, seed=11)
             .select("doc_id", "spans").localCheckpoint())
     mem = resolve_entities(spark, docs, threshold=0.65)
-    dur, _snap = resolve_entities_checkpointed(
+    dur, _snap = _resolve(
         spark, docs, str(tmp_path / "er"), threshold=0.65)
 
     def rows(df):

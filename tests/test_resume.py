@@ -2,7 +2,7 @@
 never recomputed (the round-1 resume path rebuilt everything from raw
 documents; this proves the fixed contract).
 
-Strategy: run the checkpointed (IceLite) pipeline to completion, wipe
+Strategy: run the IceLite-committed job to completion, wipe
 the snapshots *after* a chosen stage (simulating a kill there), then
 re-run with a POISONED documents frame.  If resume recomputed from
 documents, the output would reflect the poisoned input; identical output
@@ -15,7 +15,8 @@ import pytest
 
 from metasra_pipeline_spark.datagen import docs_from_kv
 from metasra_pipeline_spark.icelite import IceLiteTable
-from metasra_pipeline_spark.ops import run_icelite_pipeline
+from metasra_pipeline_spark.job import run_job
+from metasra_pipeline_spark.ops import IceLiteSnapshotter
 
 
 @pytest.fixture()
@@ -36,9 +37,15 @@ def _rv_set(df):
             for r in df.collect()}
 
 
+def _run(spark, docs, refdata, wd):
+    snap = IceLiteSnapshotter(spark, wd)
+    out = run_job(spark, docs, refdata, snap)
+    return out["mapped_terms"], out["real_values"], snap
+
+
 def test_kill_and_rerun_resumes_from_snapshots(spark, refdata, docs, tmp_path):
     wd = str(tmp_path / "wd")
-    mapped1, rv1, _ = run_icelite_pipeline(spark, docs, refdata, wd)
+    mapped1, rv1, _ = _run(spark, docs, refdata, wd)
     out1, rvs1 = _mapped_set(mapped1), _rv_set(rv1)
     assert out1, "pipeline produced terms"
 
@@ -59,13 +66,13 @@ def test_kill_and_rerun_resumes_from_snapshots(spark, refdata, docs, tmp_path):
     # poisoned input: totally different doc — any recompute-from-documents
     # path would change kv and therefore the output
     poisoned = docs_from_kv(spark, [("zz", [("tissue", "liver")])])
-    mapped2, rv2, snap2 = run_icelite_pipeline(spark, poisoned, refdata, wd)
+    mapped2, rv2, snap2 = _run(spark, poisoned, refdata, wd)
     assert _mapped_set(mapped2) == out1
     assert _rv_set(rv2) == rvs1
     assert survivors <= set(snap2.stages_resumed)
 
     # fully-committed re-run: every stage resumes, zero computed
-    mapped3, _, snap3 = run_icelite_pipeline(spark, poisoned, refdata, wd)
+    mapped3, _, snap3 = _run(spark, poisoned, refdata, wd)
     assert _mapped_set(mapped3) == out1
     assert snap3.stages_computed == []
     assert "kv" in snap3.stages_resumed and "m_final" in snap3.stages_resumed
