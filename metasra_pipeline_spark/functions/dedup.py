@@ -220,16 +220,12 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
 
     assigned, _planes = lsh_ivf_assign(embeddings, n_bits=n_bits,
                                        seed=seed, vec_col=vec_col)
-    rows = None
     if numpy_attach is None:
         np_max = int(_os.environ.get("COSINE_NP_ATTACH_MAX_ROWS", "200000"))
-        if np_max > 0:
-            # one evaluation of the embeddings lineage, and never more
-            # than cap + 1 rows on the driver: the rows ARE the matrix
-            # when they fit
-            rows = (embeddings.select(id_col, vec_col)
-                    .limit(np_max + 1).collect())
-        numpy_attach = rows is not None and len(rows) <= np_max
+        # a row-count probe reads no vectors and stops at cap + 1 rows,
+        # so no vector reaches the driver above the cap
+        numpy_attach = (np_max > 0 and
+                        embeddings.limit(np_max + 1).count() <= np_max)
     n_bands = n_bits // band_bits
     mask = (1 << band_bits) - 1
     band_vals = F.array(*[
@@ -275,8 +271,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
         import pandas as pd
         from pyspark.sql import types as T
 
-        if rows is None:
-            rows = embeddings.select(id_col, vec_col).collect()
+        rows = embeddings.select(id_col, vec_col).collect()
         # float64 straight from the collected values, like the JVM path's
         # cast to double: narrowing through float32 would change
         # array<double> inputs

@@ -13,8 +13,6 @@ every committed table's manifest (``lineage()`` in :mod:`.icelite`).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .er.incremental import incremental_resolve_checkpointed
@@ -24,34 +22,41 @@ from .plans.pipeline import run_chunked_pipeline, run_mapping_pipeline
 from .refdata import RefData
 
 
-def run_job(spark: SparkSession, documents: DataFrame, ref: RefData | None,
-            snap: Snapshotter, *, er: bool = False, land: bool = False,
-            chunks: int = 1, threshold: float = 0.65, ngram: int = 4,
+class _Chunk(Snapshotter):
+    """Chunk ``i``'s stages as ``chunk<i>_<stage>`` cuts of ``snap``."""
+
+    def __init__(self, snap: Snapshotter, i: int):
+        self.snap, self.prefix = snap, f"chunk{i}_"
+
+    def cut(self, df, name, identity=None):
+        return self.snap.cut(df, self.prefix + name, identity)
+
+    def committed(self, name, identity=None):
+        return self.snap.committed(self.prefix + name, identity)
+
+
+def run_job(spark: SparkSession, documents: DataFrame, ref: RefData,
+            snap: Snapshotter, *, er: bool = False, chunks: int = 1,
+            threshold: float = 0.65, ngram: int = 4,
             max_block: int = 200) -> dict[str, DataFrame]:
     """Run the job over ``snap`` and return its outputs by name.
 
     The input is the ``documents`` cut, so every later stage, and a
     resumed run, reads the same rows.  The outputs are cuts too:
-    ``mapped_terms``, ``errors`` and ``match_metrics`` carry no
-    identity, like the map stages under them; with ``er``,
+    ``real_values``, ``mapped_terms``, ``errors`` and ``match_metrics``
+    carry no identity, like the map stages under them; with ``er``,
     ``er_match_metrics``, ``er_hot_keys``, ``clusters`` and
     ``cluster_terms`` carry ER's blocking and scoring identity.
-    ``real_values`` is the pipeline's own ``real_values`` cut.
 
     ``chunks > 1`` runs the mapping pipeline as concurrent per-chunk
-    pipelines, each resumable on its own under ``<workdir>/chunk=<i>``.
-    ``land`` lands ``documents`` as a delta batch against the ER stages
-    a prior ``er`` job committed (:func:`_land`).  Both need ``snap``
-    to be an :class:`..ops.IceLiteSnapshotter`."""
-    if land:
-        return _land(spark, documents, snap, threshold=threshold,
-                     ngram=ngram, max_block=max_block)
+    pipelines whose stages are ``chunk<i>_``-prefixed cuts of ``snap``,
+    each chunk resumable on its own."""
     documents = snap.cut(documents, "documents")
     if chunks > 1:
-        res = run_chunked_pipeline(
-            spark, documents, ref, n_chunks=chunks,
-            snap_factory=lambda i: IceLiteSnapshotter(
-                spark, os.path.join(snap.workdir, f"chunk={i}")))
+        res = run_chunked_pipeline(spark, documents, ref, n_chunks=chunks,
+                                   snap_factory=lambda i: _Chunk(snap, i))
+        # the chunks' union; an unchunked pipeline cuts real_values itself
+        res.real_values = snap.cut(res.real_values, "real_values")
     else:
         res = run_mapping_pipeline(spark, documents, ref, snap=snap)
     if er:
@@ -76,15 +81,16 @@ def run_job(spark: SparkSession, documents: DataFrame, ref: RefData | None,
     return out
 
 
-def _land(spark: SparkSession, documents: DataFrame,
-          snap: IceLiteSnapshotter, **params) -> dict[str, DataFrame]:
-    """Land a delta batch through
-    :func:`..er.incremental.incremental_resolve_checkpointed` and commit
-    ``clusters``, ``cluster_merges`` and a ``cluster_terms``
-    recomputed from the committed ``mapped_terms``, so no output keeps
-    a cluster id the landing merged away.  Their identity is the
-    landing's ``er_labels`` snapshot: a later landing never resumes an
-    earlier one's outputs."""
+def land_job(spark: SparkSession, documents: DataFrame,
+             snap: IceLiteSnapshotter, **params) -> dict[str, DataFrame]:
+    """Land ``documents`` as a delta batch against the ER stages a prior
+    ``run_job(er=True)`` committed under ``snap.workdir``, through
+    :func:`..er.incremental.incremental_resolve_checkpointed`, and commit
+    ``clusters``, ``cluster_merges`` and a ``cluster_terms`` recomputed
+    from the committed ``mapped_terms``, so no output keeps a cluster id
+    the landing merged away.  Their identity is the landing's
+    ``er_labels`` snapshot: a later landing never resumes an earlier
+    one's outputs.  ``params`` are the blocking and scoring ones."""
     mapped = snap.committed("mapped_terms")
     if mapped is None:
         raise FileNotFoundError(

@@ -270,10 +270,10 @@ def run_chunked_pipeline(spark: SparkSession, documents: DataFrame,
     C scales with executor count (a 4N-executor deployment runs 4× the
     chunks concurrently); locally we default C = max(1, cores // 2).
 
-    ``snap_factory(i)`` may supply a per-chunk Snapshotter (e.g. an
-    IceLiteSnapshotter on ``<workdir>/chunk=i`` for per-chunk resume —
-    a failed chunk re-runs alone, like the reference's failed-chunk
-    re-submission).
+    ``snap_factory(i)`` may supply a per-chunk Snapshotter for
+    per-chunk resume (``job.run_job`` gives chunk i ``chunk<i>_``-named
+    cuts of the job's snapshotter) — a failed chunk re-runs alone, like
+    the reference's failed-chunk re-submission.
     """
     from concurrent.futures import ThreadPoolExecutor
     from functools import reduce

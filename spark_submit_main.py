@@ -5,12 +5,13 @@
         --workdir <checkpoint dir> [--refdata <json>] [--er | --er-land] \\
         [--chunks N]
 
-Runs :func:`metasra_pipeline_spark.job.run_job` over an Iceberg table
-name or parquet path of span documents, with one IceLite snapshotter
-over --workdir: the map stages, the ER stages and every output table
-(mapped_terms, real_values, errors, match_metrics, and with --er
-er_match_metrics, er_hot_keys, clusters, cluster_terms) commit side by
-side there, and a re-run resumes after the last commit.
+Runs :func:`metasra_pipeline_spark.job.run_job` (``land_job`` with
+--er-land) over an Iceberg table name or parquet path of span
+documents, with one IceLite snapshotter over --workdir: the map stages,
+the ER stages and every output table (real_values, mapped_terms,
+errors, match_metrics, and with --er er_match_metrics, er_hot_keys,
+clusters, cluster_terms) commit side by side there, and a re-run
+resumes after the last commit.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
     spark = SparkSession.builder.appName("metasra-pipeline").getOrCreate()
 
-    from metasra_pipeline_spark.job import run_job
+    from metasra_pipeline_spark.job import land_job, run_job
     from metasra_pipeline_spark.ops import IceLiteSnapshotter
     from metasra_pipeline_spark.refdata import load_refdata
 
@@ -49,12 +50,15 @@ def main(argv: list[str] | None = None) -> None:
         documents = spark.read.parquet(args.documents)
     else:
         documents = spark.read.table(args.documents)
-    # --chunks > 1 snapshots each chunk under <workdir>/chunk=<i>, so a
-    # failed chunk re-runs alone (reference: failed-Condor-chunk
+    snap = IceLiteSnapshotter(spark, args.workdir)
+    if args.er_land:
+        land_job(spark, documents, snap)
+        return
+    # --chunks > 1 snapshots each chunk's stages as chunk<i>_<stage>, so
+    # a failed chunk re-runs alone (reference: failed-Condor-chunk
     # re-submission, create_metasra/Snakefile:481-486)
-    ref = None if args.er_land else load_refdata(spark, args.refdata)
-    run_job(spark, documents, ref, IceLiteSnapshotter(spark, args.workdir),
-            er=args.er, land=args.er_land, chunks=args.chunks)
+    run_job(spark, documents, load_refdata(spark, args.refdata), snap,
+            er=args.er, chunks=args.chunks)
 
 
 if __name__ == "__main__":

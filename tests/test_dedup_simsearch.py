@@ -384,9 +384,9 @@ def test_cosine_neardup_numpy_attach_double_vectors_and_unique_ids(spark):
 
 
 def test_cosine_neardup_auto_gate_each_side_of_the_cap(spark, monkeypatch):
-    """The auto gate collects at most cap + 1 rows once: a cap equal to
-    the row count takes the numpy attach, one below it the JVM
-    attach-join, and both give the same pairs."""
+    """The auto gate's capped row count: a cap equal to the row count
+    takes the numpy attach, one below it the JVM attach-join, and both
+    give the same pairs."""
     from metasra_pipeline_spark.functions.dedup import cosine_near_dup_pairs
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -13,7 +13,7 @@ import pytest
 import spark_submit_main
 from metasra_pipeline_spark.datagen import docs_from_kv
 from metasra_pipeline_spark.icelite import IceLiteTable
-from metasra_pipeline_spark.job import run_job
+from metasra_pipeline_spark.job import _Chunk, land_job, run_job
 from metasra_pipeline_spark.ops import IceLiteSnapshotter, LocalSnapshotter
 from metasra_pipeline_spark.plans.pipeline import run_mapping_pipeline
 
@@ -99,19 +99,39 @@ def _assert_lineage(spark, wd, tables):
             for x in _table(wd, name).lineage()} == set(tables)
 
 
-def test_main_without_er(spark, refdata, docs_path, tmp_path):
+def test_chunk_stages_are_prefixed_cuts_of_any_snapshotter(spark):
+    """A chunk's snapshotter needs nothing of the job's but ``cut`` and
+    ``committed``: here an in-memory one."""
+    names = _Names()
+    chunk = _Chunk(names, 1)
+    assert sorted(r.id for r in chunk.cut(spark.range(3), "kv").collect()) \
+        == [0, 1, 2]
+    assert chunk.committed("kv") is None
+    assert names.names == ["chunk1_kv"]
+
+
+@pytest.mark.parametrize("chunks", [1, 2])
+def test_main_without_er(spark, refdata, docs_path, tmp_path, chunks):
+    """With --chunks 2 each chunk's stages are chunk<i>_-prefixed tables
+    of the one workdir, and the outputs, real_values included, still
+    commit at its top."""
     wd = str(tmp_path / "wd")
-    spark_submit_main.main(["--documents", docs_path, "--workdir", wd])
+    spark_submit_main.main(["--documents", docs_path, "--workdir", wd,
+                            "--chunks", str(chunks)])
 
     names = _Names()
     mem = run_mapping_pipeline(spark, spark.read.parquet(docs_path), refdata,
                                snap=names)
-    tables = {"documents", *names.names, *MAP_OUTPUTS}
+    stages = (names.names if chunks == 1 else
+              [f"chunk{i}_{n}" for i in range(chunks) for n in names.names])
+    tables = {"documents", "real_values", *stages, *MAP_OUTPUTS}
     assert set(os.listdir(wd)) == tables
     _assert_lineage(spark, wd, tables)
     mapped = _table(wd, "mapped_terms").read(spark)
     assert _rows(mapped) == _rows(mem.mapped_terms)
     assert sum(_rows(mapped).values()) > 0
+    assert _rows(_table(wd, "real_values").read(spark)) \
+        == _rows(mem.real_values)
     assert _table(wd, "errors").read(spark).count() == 0
 
 
@@ -181,7 +201,7 @@ def test_landing_keeps_cluster_terms_on_landed_clusters(spark, refdata,
     assert {"a1", "b1"} <= pre
 
     snap = IceLiteSnapshotter(spark, wd)
-    out = run_job(spark, bridge, None, snap, land=True, threshold=0.87)
+    out = land_job(spark, bridge, snap, threshold=0.87)
     assert {"clusters", "cluster_merges", "cluster_terms"} \
         <= set(snap.stages_computed)
     cids = {r["cluster_id"] for r in out["clusters"].collect()}
@@ -196,6 +216,6 @@ def test_landing_keeps_cluster_terms_on_landed_clusters(spark, refdata,
     # a re-landing commits a new er_labels snapshot, so it recomputes
     # the outputs instead of resuming the first landing's
     again = IceLiteSnapshotter(spark, wd)
-    run_job(spark, bridge, None, again, land=True, threshold=0.87)
+    land_job(spark, bridge, again, threshold=0.87)
     assert {"clusters", "cluster_merges", "cluster_terms"} \
         <= set(again.stages_computed)

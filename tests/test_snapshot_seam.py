@@ -31,7 +31,7 @@ def test_icelite_table_only_behind_the_seam():
 
 
 def test_icelite_wrappers_commit_only_through_the_snapshotter():
-    wrappers = {"run_job"}
+    wrappers = {"run_job", "land_job"}
     seen = set()
     for _rel, src in _sources():
         for node in ast.walk(ast.parse(src)):
