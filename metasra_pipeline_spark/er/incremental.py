@@ -18,8 +18,10 @@ with work proportional to the delta, not the base:
    frequencies, matching batch semantics).
 3. **Star-contracted delta CC**: every base endpoint of an accepted
    edge is contracted to its existing ``cluster_id`` super-node, so
-   connected components runs on a graph whose node count is
-   O(new docs + touched base clusters) — independent of base size.
+   :func:`..er.resolution.connected_components` (the batch path's
+   routine) runs on a graph whose node count is
+   O(new docs + touched base clusters) — independent of base size,
+   and almost always under its driver union-find cap.
 4. **Merge log**: a delta component containing ≥2 distinct base
    cluster ids means a new document transitively bridged existing
    clusters; the returned ``merges`` frame (old_cluster_id →
@@ -27,12 +29,9 @@ with work proportional to the delta, not the base:
    join (merge counts are tiny relative to the base) and is the audit
    record a production deployment replays onto downstream tables.
 
-Scale notes: the only O(base) costs are the base rep/key-table scans
-feeding the new-vs-base equi-join and the final relabel join — both
-narrow, shuffle-free on the base side when ``base_keys`` /
-``base_reps`` are persisted bucketed-by-key/doc_id from the prior run
-(both are accepted as optional precomputed arguments for exactly that
-reason).  Everything quadratic touches only the delta.
+Scale notes: the O(base) costs are the base rep/key-table derivation
+feeding the new-vs-base equi-join, the full-corpus IDF and the final
+relabel join.  Everything quadratic touches only the delta.
 
 Reference contrast: the reference pipeline has no incremental story at
 all — new SRA dumps re-run the full Condor DAG
@@ -117,48 +116,6 @@ def delta_candidate_pairs(new_keys: DataFrame, base_keys: DataFrame,
             .drop("n_shared"))
 
 
-def _delta_cc(edges: DataFrame, small_graph_cap: int) -> DataFrame:
-    """Connected components sized for a DELTA graph.
-
-    The contracted delta graph has O(new docs + touched clusters)
-    edges by construction, so the distributed large-star/small-star
-    loop — O(log n) driver-synchronized rounds, each a self-join +
-    aggregate job — is almost always overkill: below
-    ``small_graph_cap`` edges the whole edge list fits on the driver
-    and a plain union-find labels it in milliseconds (same min-id
-    representative semantics).  Above the cap — a delta big enough
-    that its graph is itself web-scale — fall back to the distributed
-    loop."""
-    if small_graph_cap > 0:
-        # count first (a cheap aggregate — the edge frame is already
-        # materialized by the caller's localCheckpoint): collecting
-        # cap+1 rows just to discover the graph is big would ship
-        # hundreds of MB to the driver and then throw them away
-        if edges.count() <= small_graph_cap:
-            head = edges.collect()
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:
-                    parent[x], x = r, parent[x]
-                return r
-
-            for r in head:
-                a, b = r["doc_a"], r["doc_b"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            rows = [(n, find(n)) for n in parent]
-            return local_frame(edges.sparkSession, rows,
-                               "doc_id string, cluster_id string")
-    return connected_components(edges)
-
-
 def incremental_resolve(spark: SparkSession,
                         base_profiles: DataFrame,
                         base_clusters: DataFrame,
@@ -166,13 +123,6 @@ def incremental_resolve(spark: SparkSession,
                         threshold: float = 0.65,
                         ngram: int = 4,
                         max_block: int = 200,
-                        min_shared: int = MIN_SHARED,
-                        rare_df: int = RARE_DF,
-                        base_reps: DataFrame | None = None,
-                        base_keys: DataFrame | None = None,
-                        idf: dict[str, float] | None = None,
-                        default_idf: float = 10.0,
-                        small_graph_cap: int = 1_000_000,
                         scorer: str = "softtfidf") -> dict[str, DataFrame]:
     """Resolve ``new_documents`` against an existing clustering.
 
@@ -180,8 +130,6 @@ def incremental_resolve(spark: SparkSession,
     ``base_profiles`` / ``base_clusters`` are that function's outputs
     for the already-resolved corpus (production: read from the
     committed ``er_profiles`` / ``er_labels`` IceLite tables).
-    ``base_reps`` / ``base_keys`` may be passed precomputed to skip
-    the two O(base) derivations.
 
     Returns ``{clusters, new_clusters, merges, pairs, hot_keys}``:
     ``clusters`` is the full updated assignment (base relabeled by
@@ -205,8 +153,7 @@ def incremental_resolve(spark: SparkSession,
     if scorer not in ("softtfidf", "native"):
         raise ValueError(f"unknown scorer {scorer!r}")
     newp = doc_profiles(new_documents).localCheckpoint(eager=True)
-    if base_reps is None:
-        base_reps = representative_profiles(base_profiles)
+    base_reps = representative_profiles(base_profiles)
 
     # dedup-within-batch: one rep per distinct new profile; members
     # attach via star edges exactly like the batch path
@@ -236,12 +183,10 @@ def incremental_resolve(spark: SparkSession,
     # (semi-join), so the cap check is O(delta keys), not O(base).
     new_keys, _ = blocking_keys(unseen, ngram=ngram,
                                 max_block=2**31 - 1)
-    if base_keys is None:
-        # UNCAPPED on purpose: every cap decision happens on the
-        # combined counts below.  (A precomputed ``base_keys`` should
-        # likewise be the uncapped key table.)
-        base_keys, _ = blocking_keys(base_reps, ngram=ngram,
-                                     max_block=2**31 - 1)
+    # UNCAPPED on purpose: every cap decision happens on the combined
+    # counts below
+    base_keys, _ = blocking_keys(base_reps, ngram=ngram,
+                                 max_block=2**31 - 1)
     base_touched = base_keys.join(new_keys.select("key").distinct(),
                                   on="key", how="left_semi")
     sizes = (new_keys.select("key", "doc_id")
@@ -255,16 +200,8 @@ def incremental_resolve(spark: SparkSession,
     hot_new = sizes.where(F.col("n_docs") > max_block)
     new_keys = new_keys.join(hot_new.select("key"), on="key",
                              how="left_anti")
-    pairs = (delta_candidate_pairs(new_keys, base_keys,
-                                   min_shared=min_shared,
-                                   key_df=sizes, rare_df=rare_df)
+    pairs = (delta_candidate_pairs(new_keys, base_keys, key_df=sizes)
              .localCheckpoint(eager=True))
-    # full-corpus IDF (base ∪ new).  Recomputing it is an O(base)
-    # explode+groupBy per landing; production passes the prior run's
-    # stored head via ``idf``/``default_idf`` (the Zipf head is stable
-    # between landings) just like base_reps/base_keys.
-    if idf is None and scorer == "softtfidf":
-        idf, default_idf = token_idf(base_profiles.unionByName(newp))
     # score_pairs augments every profile row it is handed (weight maps,
     # bound precomputations) — restricting it to TOUCHED docs keeps the
     # scoring stage O(candidate pairs), not O(base corpus).  Measured at
@@ -282,6 +219,8 @@ def incremental_resolve(spark: SparkSession,
         scored = score_pairs(pairs, prof_union, idf=None,
                              reject_below=None)
     else:
+        # full-corpus IDF (base ∪ new), an O(base) explode+groupBy
+        idf, default_idf = token_idf(base_profiles.unionByName(newp))
         scored = score_pairs(pairs, prof_union, idf=idf,
                              default_idf=default_idf,
                              reject_below=threshold)
@@ -307,7 +246,7 @@ def incremental_resolve(spark: SparkSession,
     delta_edges = (contract(contract(accepted, "doc_a"), "doc_b")
                    .where(F.col("doc_a") != F.col("doc_b"))
                    .localCheckpoint(eager=True))
-    labels = _delta_cc(delta_edges, small_graph_cap)
+    labels = connected_components(delta_edges)
 
     # merge log: a base cluster super-node relabeled by the delta CC
     base_cids = base_clusters.select(

@@ -11,10 +11,11 @@ blocking → pairwise scoring → transitive clustering:
 3. **Pairwise scoring**: candidates = doc pairs sharing a key; scored in
    one vectorized pandas UDF fusing Jaro-Winkler + token-set Jaccard +
    Levenshtein ratio (functions/similarity.py).
-4. **Connected components**: alternating large-star / small-star
-   (Kiveris et al., "Connected Components in MapReduce and Beyond") as
-   self-joins, localCheckpoint per round to cut lineage, min-doc_id as
-   cluster representative.
+4. **Connected components**: a driver union-find for graphs up to
+   ``CC_DRIVER_MAX_EDGES`` edges, else alternating large-star /
+   small-star (Kiveris et al., "Connected Components in MapReduce and
+   Beyond") as self-joins, localCheckpoint per round to cut lineage;
+   min-doc_id as cluster representative either way.
 5. **Consolidation**: per-cluster canonical mapped-term set
    (build_metasra_database_files.py:48-110 at cluster grain).
 
@@ -320,6 +321,11 @@ _KV_CONFLICT = (
     "substring_index(f, '=', 1) = substring_index(e, '=', 1)))")
 
 
+#: augmented-profile row count up to which score_pairs broadcasts the
+#: profiles to both pair joins
+ER_BROADCAST_PROFILES_MAX = 200_000
+
+
 def score_pairs(pairs: DataFrame, profiles: DataFrame,
                 idf: dict[str, float] | None = None,
                 default_idf: float = 10.0,
@@ -354,8 +360,6 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
     profiles (lazy IF — the bound expression never evaluates; they
     score 1.0 directly).
     """
-    import os as _os
-
     spark = pairs.sparkSession
     aug = reject_below is not None
     key_veto = idf is not None
@@ -397,10 +401,7 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
     # the cap and the plan falls back to the shuffle-join shape
     # unchanged (scale-adaptive, not a local-only tune).
     sc = pairs.sparkSession.sparkContext
-    bcast_max = int(_os.environ.get("ER_BROADCAST_PROFILES_MAX", "200000"))
-    use_bcast = False
-    if bcast_max > 0 and aug:
-        use_bcast = prof.count() <= bcast_max
+    use_bcast = aug and prof.count() <= ER_BROADCAST_PROFILES_MAX
     prof_a = prof.select(F.col("doc_id").alias("doc_a"),
                          F.col("profile").alias("prof_a"),
                          F.col("tokens").alias("toks_a"), *a_extra)
@@ -563,25 +564,64 @@ def score_pairs(pairs: DataFrame, profiles: DataFrame,
 
 
 # ------------------------------------------------------------------ 4
+#: edge count up to which connected_components labels on the driver
+CC_DRIVER_MAX_EDGES = 1_000_000
+
+
+def _driver_components(edges: DataFrame) -> DataFrame:
+    """Min-id union-find over edges collected once as Arrow (no ``Row``
+    objects).  Python compares ``str`` by code point and Spark by UTF-8
+    byte, and the two orders agree, so the roots match the rounds'."""
+    t = edges.select("doc_a", "doc_b").toArrow()
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in zip(t.column("doc_a").to_pylist(),
+                    t.column("doc_b").to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    typ = edges.schema["doc_a"].dataType.simpleString()
+    return local_frame(edges.sparkSession, [(n, find(n)) for n in parent],
+                       f"doc_id {typ}, cluster_id {typ}")
+
+
 def connected_components(edges: DataFrame, max_iter: int = 20,
                          num_salts: int = 0) -> DataFrame:
-    """Alternating large-star / small-star CC → (doc_id, cluster_id).
+    """Connected components of (doc_a, doc_b) edges → (doc_id,
+    cluster_id), the component's minimum id as cluster_id.  Batch ER,
+    the incremental landing and q27 all label through here.
 
-    Each round is two self-join+aggregate passes; converges in
-    O(log n) rounds; a LAZY localCheckpoint per round cuts lineage
-    (swap for reliable checkpoints / Iceberg snapshots on a cluster).
-    Lazy + the convergence-signature ``first()`` means ONE driver-sync
-    job per round — the signature action materializes that round's
-    checkpoint in the same job (was 2 jobs/round before round 4).
+    The path follows the input size: an early-stopping count of at most
+    :data:`CC_DRIVER_MAX_EDGES` + 1 rows decides.  Up to the cap the
+    edges are collected once and a driver union-find labels them (two
+    jobs, whatever the graph's diameter).  Above it, alternating
+    large-star / small-star rounds run distributed: two
+    self-join+aggregate passes per round, O(log n) rounds, a LAZY
+    localCheckpoint per round to cut lineage, and one driver-sync job
+    per round (the convergence count materializes that round's
+    checkpoint in the same job).
 
-    Skew: the min-neighbor aggregations partial-aggregate map-side (no
-    salting needed); the edge⋈min-neighbor self-joins are skewed on hub
-    nodes and rely on AQE skew-join splitting by default.  Pass
-    ``num_salts > 0`` to instead salt those joins explicitly
+    Skew (rounds path): the min-neighbor aggregations partial-aggregate
+    map-side (no salting needed); the edge⋈min-neighbor self-joins are
+    skewed on hub nodes and rely on AQE skew-join splitting by default.
+    Pass ``num_salts > 0`` to instead salt those joins explicitly
     (functions/skew.py) — for clusters without AQE or with known a
     priori hubs; output labels are identical either way
     (tests/test_er.py::test_cc_salted_join_equivalence).
     """
+    if edges.limit(CC_DRIVER_MAX_EDGES + 1).count() <= CC_DRIVER_MAX_EDGES:
+        return _driver_components(edges)
+
     def join_m(E: DataFrame, M: DataFrame) -> DataFrame:
         if num_salts > 0:
             from ..functions.skew import salted_join
@@ -759,13 +799,13 @@ def resolve_entities(spark: SparkSession, documents: DataFrame,
                         reject_below=None if native else threshold),
             "er_scored", identity)
 
-    # Star contraction: the iterative CC only ever sees the rep-level
-    # near-dup graph (scored pairs are rep-vs-rep by construction);
-    # identical-profile members attach to their rep's component with one
-    # narrow join afterwards instead of O(log n) rounds of star edges.
+    # Star contraction: CC only ever sees the rep-level near-dup graph
+    # (scored pairs are rep-vs-rep by construction); identical-profile
+    # members attach to their rep's component with one narrow join
+    # afterwards instead of entering CC as star edges.
     doc_rep, star = _doc_rep_star(profiles, reps)
-    # checked before connected_components, which runs its
-    # driver-synchronized rounds EAGERLY at construction
+    # checked before connected_components, which counts the edges and
+    # labels them (union-find or rounds) EAGERLY at construction
     labels = snap.committed("er_labels", identity)
     if labels is None:
         rep_edges = (scored.where(F.col("score") >= threshold)

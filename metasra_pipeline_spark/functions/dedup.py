@@ -172,6 +172,11 @@ def doc_fingerprint(df: DataFrame, id_col: str = "doc_id",
             .groupBy(id_col).agg(F.min("h").alias("fingerprint")))
 
 
+#: embedding row count up to which cosine_near_dup_pairs' auto gate
+#: takes the numpy attach
+COSINE_NP_ATTACH_MAX_ROWS = 200_000
+
+
 def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
                           n_bits: int = 4, band_bits: int = 2,
                           seed: int = 7, id_col: str = "vec_id",
@@ -202,8 +207,9 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
 
     ``numpy_attach`` (guide §4.2 / §8 "broadcast the plan"): when the
     embedding table is small enough to broadcast as a matrix (auto:
-    row count ≤ $COSINE_NP_ATTACH_MAX_ROWS, default 200k ≈ 100 MB of
-    float64 at dim 64), candidate pairs ship ONLY (id_a, id_b) into a
+    row count ≤ :data:`COSINE_NP_ATTACH_MAX_ROWS`, 200k; collecting
+    150k float vectors of dim 64 as Arrow peaked the driver's RSS
+    198 MB higher), candidate pairs ship ONLY (id_a, id_b) into a
     mapInPandas kernel that gathers both vectors from the broadcast
     matrix and folds the dot product dimension-by-dimension —
     vectorized over the pair batch, sequential over dims, so each
@@ -212,20 +218,18 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     Rounding and thresholding stay JVM-side on the raw double.
     Measured 2.7 → 1.7 s at sf0.1 (875k candidate pairs, 2k vectors);
     above the cap the plan falls back to the JVM attach-join unchanged.
-    The numpy path needs unique ids and raises ``ValueError`` otherwise.
+    The numpy path needs unique ids and equal-length vectors, and raises
+    ``ValueError`` otherwise.
     """
-    import os as _os
-
     from .simsearch import _dot, _norm, lsh_ivf_assign
 
     assigned, _planes = lsh_ivf_assign(embeddings, n_bits=n_bits,
                                        seed=seed, vec_col=vec_col)
     if numpy_attach is None:
-        np_max = int(_os.environ.get("COSINE_NP_ATTACH_MAX_ROWS", "200000"))
         # a row-count probe reads no vectors and stops at cap + 1 rows,
         # so no vector reaches the driver above the cap
-        numpy_attach = (np_max > 0 and
-                        embeddings.limit(np_max + 1).count() <= np_max)
+        cap = COSINE_NP_ATTACH_MAX_ROWS
+        numpy_attach = embeddings.limit(cap + 1).count() <= cap
     n_bands = n_bits // band_bits
     mask = (1 << band_bits) - 1
     band_vals = F.array(*[
@@ -269,15 +273,25 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     if numpy_attach:
         import numpy as np
         import pandas as pd
+        import pyarrow.compute as pc
         from pyspark.sql import types as T
 
-        rows = embeddings.select(id_col, vec_col).collect()
-        # float64 straight from the collected values, like the JVM path's
-        # cast to double: narrowing through float32 would change
-        # array<double> inputs
-        mat = np.array([r[vec_col] for r in rows], dtype=np.float64)
-        index = {r[id_col]: i for i, r in enumerate(rows)}
-        if len(index) != len(rows):
+        # one Arrow collect, no Row objects: ids as Python values, the
+        # vectors as one flat buffer widened to float64 like the JVM
+        # path's cast to double (never narrowed through float32)
+        t = embeddings.select(id_col, vec_col).toArrow()
+        ids = t.column(id_col).to_pylist()
+        vecs = t.column(vec_col).combine_chunks()
+        lens = vecs.value_lengths()
+        if vecs.null_count or pc.count_distinct(lens).as_py() > 1:
+            raise ValueError(
+                f"cosine_near_dup_pairs: null or ragged {vec_col} vectors; "
+                "the numpy attach needs one dimension")
+        dim = lens[0].as_py() if len(ids) else 0
+        mat = (vecs.flatten().to_numpy(zero_copy_only=False)
+               .astype(np.float64, copy=False).reshape(len(ids), dim))
+        index = {x: i for i, x in enumerate(ids)}
+        if len(index) != len(ids):
             # the JVM attach-join emits one row per duplicate combination;
             # an id -> row map cannot, so refuse rather than diverge
             raise ValueError(

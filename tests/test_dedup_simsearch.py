@@ -383,17 +383,32 @@ def test_cosine_neardup_numpy_attach_double_vectors_and_unique_ids(spark):
         cosine_near_dup_pairs(dup, numpy_attach=True)
 
 
+def test_cosine_neardup_numpy_attach_refuses_ragged_vectors(spark):
+    """The numpy attach stacks every vector into one matrix, so vectors
+    of different lengths are refused rather than misaligned."""
+    import pytest
+
+    from metasra_pipeline_spark.functions.dedup import cosine_near_dup_pairs
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.1]), (3, [1.0, 0.0, 0.5])],
+        "vec_id: long, embedding: array<double>")
+    with pytest.raises(ValueError, match="ragged"):
+        cosine_near_dup_pairs(emb, numpy_attach=True)
+
+
 def test_cosine_neardup_auto_gate_each_side_of_the_cap(spark, monkeypatch):
     """The auto gate's capped row count: a cap equal to the row count
     takes the numpy attach, one below it the JVM attach-join, and both
     give the same pairs."""
+    from metasra_pipeline_spark.functions import dedup
     from metasra_pipeline_spark.functions.dedup import cosine_near_dup_pairs
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     n = emb.count()
 
     def run(cap):
-        monkeypatch.setenv("COSINE_NP_ATTACH_MAX_ROWS", str(cap))
+        monkeypatch.setattr(dedup, "COSINE_NP_ATTACH_MAX_ROWS", cap)
         df = cosine_near_dup_pairs(emb)
         plan = df._jdf.queryExecution().analyzed().toString()
         return ("MapInPandas" in plan,

@@ -11,7 +11,6 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 EXPECTED = {
     "SPARK_GRAFT_CPUS", "SPARK_SHUFFLE_PARTITIONS", "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_FAULT_DOC", "SPARK_GRAFT_FAULT_TOKEN",
-    "ER_BROADCAST_PROFILES_MAX", "COSINE_NP_ATTACH_MAX_ROWS",
 }
 
 _READ = re.compile(

@@ -28,15 +28,24 @@ def test_similarity_kernels():
                       ["same", "text"], ["same", "text"]) == pytest.approx(1.0)
 
 
-def test_connected_components_vs_python_union_find(spark):
+def test_connected_components_vs_python_union_find(spark, monkeypatch):
+    """Both paths against a plain union-find: the driver union-find this
+    edge count takes by default, and the rounds forced by a zero cap.
+    The non-ASCII ids pin that Python's code-point order (the driver
+    path) agrees with Spark's UTF-8 byte order (the rounds): U+FF61
+    sorts before U+1F600 in both, though after it in UTF-16."""
     import random
+
+    from metasra_pipeline_spark.er import resolution
     rng = random.Random(7)
     nodes = [f"n{i:03d}" for i in range(120)]
+    wide = ["\U0001f600", "\uff61", "日本", "é", "ß"]
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(150)]
     edges = [(a, b) for a, b in edges if a != b]
+    edges += [("\U0001f600", "\uff61"), ("日本", "é"), ("é", "ß")]
 
     # ground truth: plain union-find
-    parent = {n: n for n in nodes}
+    parent = {n: n for n in nodes + wide}
 
     def find(x):
         while parent[x] != x:
@@ -49,18 +58,43 @@ def test_connected_components_vs_python_union_find(spark):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     truth = {}
-    for n in nodes:
+    for n in nodes + wide:
         truth.setdefault(find(n), set()).add(n)
-    expected = {n: min(comp) for comp in truth.values() for n in comp
-                if len(comp) > 1 or any(n in e for e in edges)}
+    touched = {x for e in edges for x in e}
+    want = {n: min(c) for c in truth.values() if c & touched
+            for n in c if n in touched}
+    assert want["\U0001f600"] == "\uff61" and want["日本"] == "ß"
 
     e_df = spark.createDataFrame(edges, "doc_a: string, doc_b: string")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in connected_components(e_df).collect()}
-    touched = {x for e in edges for x in e}
-    assert got == {n: min_root for n, min_root in
-                   ((n, min(c)) for c in truth.values() if c & touched
-                    for n in c) if n in touched}
+    for cap in (resolution.CC_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(resolution, "CC_DRIVER_MAX_EDGES", cap)
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in resolution.connected_components(e_df).collect()}
+        assert got == want, cap
+
+
+def test_cc_driver_gate_each_side_of_the_cap(spark, monkeypatch):
+    """connected_components' early-stopping edge count: a cap equal to
+    the edge count labels on the driver (a LocalRelation), one below it
+    runs the rounds, and both give the same labels."""
+    from metasra_pipeline_spark.er import resolution
+    edges = [(f"c{i}", f"c{i + 1}") for i in range(12)]   # a chain
+    edges += [("h", f"s{i}") for i in range(8)]           # a star
+    edges += [("x", "y"), ("y", "x")]
+    e_df = spark.createDataFrame(edges, "doc_a: string, doc_b: string")
+
+    def run(cap):
+        monkeypatch.setattr(resolution, "CC_DRIVER_MAX_EDGES", cap)
+        df = resolution.connected_components(e_df)
+        root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+        return (root == "LocalRelation",
+                {r["doc_id"]: r["cluster_id"] for r in df.collect()})
+
+    driver_side, at_cap = run(len(edges))
+    rounds_side, below_cap = run(len(edges) - 1)
+    assert driver_side and not rounds_side
+    assert at_cap == below_cap
+    assert at_cap["c12"] == "c0" and at_cap["s7"] == "h" and at_cap["y"] == "x"
 
 
 def test_er_f1_gate(spark):
@@ -78,11 +112,15 @@ def test_er_f1_gate(spark):
     assert clusters.select("doc_id").distinct().count() == 300
 
 
-def test_cc_salted_join_equivalence(spark):
+def test_cc_salted_join_equivalence(spark, monkeypatch):
     """Explicit salting of the CC self-joins (functions/skew.py) must
     yield the same labels as the AQE-default path, on a graph with a
-    deliberate hub (one node linked to 80 others) plus random edges."""
+    deliberate hub (one node linked to 80 others) plus random edges.
+    A zero driver cap forces the rounds, the only path that salts."""
     import random
+
+    from metasra_pipeline_spark.er import resolution
+    monkeypatch.setattr(resolution, "CC_DRIVER_MAX_EDGES", 0)
     rng = random.Random(11)
     nodes = [f"s{i:03d}" for i in range(120)]
     edges = [("s000", n) for n in nodes[1:81]]  # hub: degree 80
